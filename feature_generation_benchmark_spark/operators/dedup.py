@@ -170,20 +170,12 @@ def ngram_jaccard_pairs(
         alpha = F.ceil(F.lit(threshold) * F.col("n_shingles") - F.lit(1e-9))
         # persist: prefix feeds BOTH sides of the candidate self-join —
         # without the cut the window sort above it executes twice (the
-        # dominant 100× probe cost). Storage level (env-overridable
-        # SPARK_GRAFT_PREFIX_STORAGE): r7 chose DISK_ONLY from a one-box
-        # A/B on the OLD (distribution-distorted) probe fixture where
-        # MEMORY_AND_DISK read 40% slower; r8 re-validated on the
-        # faithful 100× fixture under a HALVED unified pool (12 GB — the
-        # shared-executor-pool emulation the r7 verdict asked for):
-        # MEMORY_AND_DISK (PySpark = serialized blocks) 116.5/96.6 s vs
-        # DISK_ONLY 129.0/125.2 s interleaved — ~17% faster, and at
-        # sf0.1 the two are within noise (3.44 vs 3.19 / 4.14 vs 4.51
-        # medians-of-5 across the two prefix consumers). Serialized
-        # in-memory blocks spill to disk under pressure anyway, so
-        # MEMORY_AND_DISK dominates: it is the r8 default.
-        import os as _os
-
+        # dominant 100× probe cost). MEMORY_AND_DISK (PySpark stores
+        # serialized blocks, which spill under pressure anyway) beat
+        # DISK_ONLY on the 100× fixture under a halved 12 GB unified
+        # pool: 116.5/96.6 s vs 129.0/125.2 s interleaved, ~17% faster;
+        # at sf0.1 the two are within noise (3.44 vs 3.19 / 4.14 vs 4.51 s
+        # medians-of-5 across the two prefix consumers).
         from pyspark import StorageLevel
 
         prefix = (
@@ -191,14 +183,7 @@ def ngram_jaccard_pairs(
                 F.col("__pos") <= F.col("n_shingles") - alpha + F.lit(1)
             )
             .select(F.col(id_col), "shingle", "__pos", "n_shingles")
-            .persist(
-                getattr(
-                    StorageLevel,
-                    _os.environ.get(
-                        "SPARK_GRAFT_PREFIX_STORAGE", "MEMORY_AND_DISK"
-                    ),
-                )
-            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         a_src = prefix
         if new_ids is not None:

@@ -76,6 +76,9 @@ def pagerank(
     # instead of a per-row `n` column carried through a crossJoin (r8,
     # guide §2.4 — the crossJoin base frame and its cache disappear)
     n = nodes.count()
+    if n == 0:
+        # empty edge list: no nodes to rank (and no 1/N start or teleport)
+        return nodes.select("node", F.lit(0).cast("long").alias("score_e9"))
     d = damping_pct
     teleport = ((100 - d) * SCALE) // (100 * n)  # == (100−d)·1e9 div 100·n
     # all-nodes zero-contribution rows: unioned into each iteration's

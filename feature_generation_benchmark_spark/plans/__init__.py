@@ -2,12 +2,6 @@ from feature_generation_benchmark_spark.plans.case_when import compile_case_when
 from feature_generation_benchmark_spark.plans.bucket_pivot import compile_bucket_pivot
 from feature_generation_benchmark_spark.plans.bucket_rollup import compile_bucket_rollup
 from feature_generation_benchmark_spark.plans.grouped_map import compile_grouped_map
-from feature_generation_benchmark_spark.plans.grouped_arrow import (
-    compile_grouped_arrow,
-)
-from feature_generation_benchmark_spark.plans.pivot_rollup import (
-    compile_pivot_rollup,
-)
 from feature_generation_benchmark_spark.plans.planner import (
     choose_strategy,
     compile_features,
@@ -19,9 +13,7 @@ __all__ = [
     "compile_bucket_pivot",
     "compile_bucket_rollup",
     "compile_grouped_map",
-    "compile_grouped_arrow",
     "compile_features",
     "choose_strategy",
-    "compile_pivot_rollup",
     "oracle_sql_for_spec",
 ]

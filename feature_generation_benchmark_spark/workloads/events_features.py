@@ -10,7 +10,6 @@ from feature_generation_benchmark_spark.plans import (
     compile_bucket_pivot,
     compile_bucket_rollup,
     compile_case_when,
-    compile_grouped_arrow,
     compile_grouped_map,
 )
 from feature_generation_benchmark_spark.plans.planner import compile_features
@@ -18,9 +17,6 @@ from feature_generation_benchmark_spark.plans.incremental import (
     compile_day_partials,
     features_asof,
     merge_day_partials,
-)
-from feature_generation_benchmark_spark.plans.pivot_rollup import (
-    compile_pivot_rollup,
 )
 from feature_generation_benchmark_spark.plans.sql_text import compile_sql_text
 from feature_generation_benchmark_spark.plans.oracle import oracle_sql_for_spec
@@ -184,16 +180,8 @@ def _grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_grouped_map(EVENTS_SPEC, _load(spark, sf_dir))
 
 
-def _grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return compile_grouped_arrow(EVENTS_SPEC, _load(spark, sf_dir))
-
-
 def _case_when_premask(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_case_when(EVENTS_SPEC, _load(spark, sf_dir), premask=True)
-
-
-def _pivot_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return compile_pivot_rollup(EVENTS_SPEC, _load(spark, sf_dir))
 
 
 def _sql_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,33 +231,6 @@ def _composite_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_features(COMPOSITE_KEY_SPEC, df)
 
 
-def _join_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 — left-join CHAIN of k>2 scheme halves (the reference folds
-    its per-scheme pivot frames with successive left joins,
-    ``impl/polars_pivot-lazy.py:171-173``; r6 verdict #4 asked for this
-    as a dedicated entry instead of "by composition of J1/J2"). One
-    half per window of EVENTS_SPEC (k=4), each compiled by the planner
-    over the SAME transaction frame — every half therefore groups the
-    identical key universe, so the left-join fold provably equals the
-    one-pass aggregate the shared oracle computes (the same contract
-    the reference's fold relies on)."""
-    trx = events_transactions(
-        spark, sf_dir, max_t_minus=max(EVENTS_SPEC.windows)
-    )
-    out: DataFrame | None = None
-    for w in EVENTS_SPEC.windows:
-        sub = FeatureSpec(
-            key="user_id",
-            time_col="t_minus",
-            measure="value_cents",
-            windows=(w,),
-            groupings=EVENTS_SPEC.groupings,
-        )
-        half = compile_features(sub, trx)
-        out = half if out is None else out.join(half, "user_id", "left")
-    return out
-
-
 QUERIES = [
     QueryDef(
         "feat_case_when",
@@ -306,25 +267,10 @@ QUERIES = [
         # reference too) — verified by the correctness gate instead
     ),
     QueryDef(
-        "feat_grouped_arrow",
-        _grouped_arrow,
-        _ORACLE,
-        "grouped-map applyInArrow zero-copy fallback (strategy A5)",
-        bench=False,
-    ),
-    QueryDef(
         "feat_case_when_premask",
         _case_when_premask,
         _ORACLE,
         "pre-masked projection + plain aggs (strategy A10 rewrite of A1)",
-    ),
-    QueryDef(
-        "feat_pivot_rollup",
-        _pivot_rollup,
-        _ORACLE,
-        "known-values pivot per scheme + exact rollup + half-join (A2+A3'+J1)",
-        bench=False,  # reference-parity artifact; bucket_rollup is the
-        # engine's default at-scale plan (single pass, no half-join)
     ),
     QueryDef(
         "feat_sql_text",
@@ -351,16 +297,6 @@ QUERIES = [
         _DISCOVERED_ORACLE,
         "multi-column grouping with DISCOVERED domains (explicit bounded "
         "discovery scan -> known-values plan; the honest A6 escape hatch)",
-    ),
-    QueryDef(
-        "feat_join_chain",
-        _join_chain,
-        _ORACLE,
-        "left join chain folding one planner-compiled half per window "
-        "(J3, impl/polars_pivot-lazy.py:171-173); equals the one-pass "
-        "aggregate",
-        bench=False,  # join-shape parity artifact: 4 aggregate passes
-        # over the same frame — the engine's default is the single pass
     ),
     QueryDef(
         "feat_incremental",

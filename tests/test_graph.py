@@ -38,6 +38,13 @@ def test_damping_bounds(spark):
         _scores(spark, [(1, 2), (2, 1)], damping_pct=100)
 
 
+def test_empty_edge_list_gives_empty_scores(spark):
+    df = spark.createDataFrame([], "src long, dst long")
+    out = pagerank(df)
+    assert out.dtypes == [("node", "bigint"), ("score_e9", "bigint")]
+    assert out.collect() == []
+
+
 def test_feature_propagation_smooths_toward_global_mean(spark):
     """Message passing must contract the feature spread: the variance of
     2-hop means is no larger than the variance of raw supplier balances

@@ -179,14 +179,28 @@ def test_join_chain_equals_single_pass(spark):
     from feature_generation_benchmark_spark.sources.testdata import (
         events_transactions,
     )
+    from feature_generation_benchmark_spark.spec import FeatureSpec
     from feature_generation_benchmark_spark.workloads.events_features import (
         EVENTS_SPEC,
-        _join_chain,
     )
 
     sf = "/root/testdata/sf0.001"
-    chained = _join_chain(spark, sf)
     trx = events_transactions(spark, sf, max_t_minus=max(EVENTS_SPEC.windows))
+    chained = None
+    for w in EVENTS_SPEC.windows:
+        half = compile_features(
+            FeatureSpec(
+                key="user_id",
+                time_col="t_minus",
+                measure="value_cents",
+                windows=(w,),
+                groupings=EVENTS_SPEC.groupings,
+            ),
+            trx,
+        )
+        chained = (
+            half if chained is None else chained.join(half, "user_id", "left")
+        )
     single = compile_features(EVENTS_SPEC, trx)
     assert sorted(chained.columns) == sorted(single.columns)
     cols = sorted(chained.columns)

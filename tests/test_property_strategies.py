@@ -95,6 +95,10 @@ def test_strategies_agree_on_random_specs(spark, case):
     for name, compiler in (
         ("bucket_rollup", compile_bucket_rollup),
         ("bucket_pivot", compile_bucket_pivot),
+        (
+            "bucket_pivot_keypart",
+            lambda s, d: compile_bucket_pivot(s, d, key_partitioned=True),
+        ),
         ("grouped_map", compile_grouped_map),  # independent pandas impl
     ):
         got = _collect(compiler(spec, df), spec)

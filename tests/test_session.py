@@ -46,6 +46,14 @@ def test_cache_scope_releases_query_pins(spark):
 
     jsc = spark.sparkContext._jsc
     spark.catalog.clearCache()
+    # clearCache() leaves RDD-level pins (localCheckpoint) of earlier
+    # tests in place, and the ContextCleaner unpersists those whenever a
+    # JVM GC collects their RDDs — possibly mid-test, which would shrink
+    # `after` below `base`. Release them up front so `base` holds only
+    # the outer pin below.
+    pinned = jsc.getPersistentRDDs()
+    for rdd_id in pinned.keySet().toArray():
+        pinned.get(rdd_id).unpersist(True)
     outer = spark.range(10).cache()
     outer.count()  # pre-existing pin the scopes must not release
     base = set(jsc.getPersistentRDDs().keySet().toArray())

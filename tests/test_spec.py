@@ -46,6 +46,11 @@ def test_validation():
         Grouping(cols=("a", "b"), domains=(("x",),))
     with pytest.raises(ValueError):
         Grouping(cols=("a",), domains=(("x", "x"),))
+    # underscore-bearing domain values can spell one feature name twice:
+    # (a, b_7) and (a_b, 7) both name "a_b_7_7d_*" — refused, not merged
+    ambiguous = Grouping(cols=("c", "d"), domains=(("a", "a_b"), ("b_7", "7")))
+    with pytest.raises(ValueError, match="collide"):
+        FeatureSpec("k", "t", "m", (7,), (ambiguous,)).features()
 
 
 def test_agg_domain():

@@ -13,12 +13,8 @@ from feature_generation_benchmark_spark.plans import (
     compile_bucket_pivot,
     compile_bucket_rollup,
     compile_case_when,
-    compile_grouped_arrow,
     compile_grouped_map,
     compile_features,
-)
-from feature_generation_benchmark_spark.plans.pivot_rollup import (
-    compile_pivot_rollup,
 )
 from feature_generation_benchmark_spark.plans.sql_text import compile_sql_text
 from feature_generation_benchmark_spark.plans.planner import choose_strategy
@@ -78,8 +74,6 @@ def results(spark, tiny_transactions):
         "bucket_rollup": compile_bucket_rollup(SMALL_SPEC, tiny_transactions),
         "bucket_pivot": compile_bucket_pivot(SMALL_SPEC, tiny_transactions),
         "grouped_map": compile_grouped_map(SMALL_SPEC, tiny_transactions),
-        "grouped_arrow": compile_grouped_arrow(SMALL_SPEC, tiny_transactions),
-        "pivot_rollup": compile_pivot_rollup(SMALL_SPEC, tiny_transactions),
         "sql_text": compile_sql_text(SMALL_SPEC, tiny_transactions),
     }
 
@@ -101,18 +95,8 @@ def test_case_when_vs_grouped_map(spark, results):
                         "customer_id")
 
 
-def test_case_when_vs_grouped_arrow(spark, results):
-    assert_frames_equal(results["case_when"], results["grouped_arrow"],
-                        "customer_id")
-
-
 def test_case_when_vs_premask(spark, results):
     assert_frames_equal(results["case_when"], results["case_when_premask"],
-                        "customer_id")
-
-
-def test_case_when_vs_pivot_rollup(spark, results):
-    assert_frames_equal(results["case_when"], results["pivot_rollup"],
                         "customer_id")
 
 
@@ -183,8 +167,6 @@ def test_multi_measure_all_strategies_agree(spark, multi_transactions):
         "bucket_rollup": compile_bucket_rollup(MULTI_SPEC, multi_transactions),
         "bucket_pivot": compile_bucket_pivot(MULTI_SPEC, multi_transactions),
         "grouped_map": compile_grouped_map(MULTI_SPEC, multi_transactions),
-        "grouped_arrow": compile_grouped_arrow(MULTI_SPEC, multi_transactions),
-        "pivot_rollup": compile_pivot_rollup(MULTI_SPEC, multi_transactions),
         "sql_text": compile_sql_text(MULTI_SPEC, multi_transactions),
     }
     for name, df in others.items():
@@ -256,12 +238,6 @@ def test_composite_key_all_strategies_agree(spark, tiny_transactions):
             COMPOSITE_SPEC, tiny_transactions
         ),
         "grouped_map": compile_grouped_map(COMPOSITE_SPEC, tiny_transactions),
-        "grouped_arrow": compile_grouped_arrow(
-            COMPOSITE_SPEC, tiny_transactions
-        ),
-        "pivot_rollup": compile_pivot_rollup(
-            COMPOSITE_SPEC, tiny_transactions
-        ),
         "sql_text": compile_sql_text(COMPOSITE_SPEC, tiny_transactions),
     }.items():
         rb, cb = keyed(compiled)
@@ -394,46 +370,6 @@ def test_planner_layout_choice_from_hints(spark, tiny_transactions):
     assert default.exceptAll(hinted).count() == 0
 
 
-def test_pivot_rollup_approximate_reproduces_reference_defects(spark):
-    """approximate=True is the bit-faithful migration mode: it must show
-    the reference pivot impls' two documented defects (SURVEY §2.7.2-3)
-    that the exact default fixes — mean-of-bucket-means avg and
-    NULL-poisoned combines over empty buckets."""
-    from feature_generation_benchmark_spark.spec import Agg
-
-    spec = FeatureSpec(
-        "k", "t", "m", (7, 14),
-        (Grouping(cols=("c",), domains=(("a",),)),),
-    )
-    rows = [
-        # cust 1: bucket<=7 holds {10, 20}, bucket (7,14] holds {30}
-        (1, 3, 10.0, "a"), (1, 4, 20.0, "a"), (1, 10, 30.0, "a"),
-        # cust 2: only bucket<=7 populated — 14d bucket cell is NULL
-        (2, 5, 8.0, "a"),
-    ]
-    df = spark.createDataFrame(rows, ["k", "t", "m", "c"])
-
-    exact = {r["k"]: r for r in compile_pivot_rollup(spec, df).collect()}
-    approx = {
-        r["k"]: r
-        for r in compile_pivot_rollup(spec, df, approximate=True).collect()
-    }
-    avg14 = spec.feature_name("m", ("a",), 14, Agg.AVG)
-    sum14 = spec.feature_name("m", ("a",), 14, Agg.SUM)
-    cnt14 = spec.feature_name("m", ("a",), 14, Agg.COUNT)
-    min14 = spec.feature_name("m", ("a",), 14, Agg.MIN)
-
-    # §2.7.2: unweighted mean of bucket means vs true weighted avg
-    assert exact[1][avg14] == pytest.approx(20.0)
-    assert approx[1][avg14] == pytest.approx((15.0 + 30.0) / 2)
-    # §2.7.3: empty 14d bucket NULL-poisons + but not least/greatest
-    assert (exact[2][sum14], exact[2][cnt14]) == (8.0, 1)
-    assert approx[2][sum14] is None and approx[2][cnt14] is None
-    assert exact[2][min14] == approx[2][min14] == 8.0
-    # populated buckets agree between modes
-    assert approx[1][sum14] == exact[1][sum14] == 60.0
-
-
 # ---------------------------------------------------------------------------
 # r6 session-2 regression tests (plans review findings)
 # ---------------------------------------------------------------------------
@@ -483,15 +419,13 @@ TOTAL_SPEC = FeatureSpec(
 
 def test_empty_cols_grouping_all_strategies(spark, tiny_transactions):
     """cols=() is a valid Grouping (total per key). Every strategy must
-    handle the no-equality-terms combo mask (grouped_map/arrow used to
+    handle the no-equality-terms combo mask (grouped_map used to
     TypeError on `None & mask` at executor runtime) and agree."""
     base = compile_case_when(TOTAL_SPEC, tiny_transactions)
     for compiled in (
         compile_bucket_rollup(TOTAL_SPEC, tiny_transactions),
         compile_bucket_pivot(TOTAL_SPEC, tiny_transactions),
         compile_grouped_map(TOTAL_SPEC, tiny_transactions),
-        compile_grouped_arrow(TOTAL_SPEC, tiny_transactions),
-        compile_pivot_rollup(TOTAL_SPEC, tiny_transactions),
         compile_sql_text(TOTAL_SPEC, tiny_transactions),
     ):
         assert_frames_equal(base, compiled, "customer_id")
@@ -514,12 +448,13 @@ def test_all_empty_groupings_bucket_pivot(spark, tiny_transactions):
     )
 
 
+
 def test_pivot_rollup_rejects_ambiguous_underscore_domains(spark,
                                                            tiny_transactions):
-    """Two distinct (combo, bucket) cells may produce one concat_ws('_')
-    pivot key when domain values contain underscores — compile must
-    refuse (via the spec-level name-collision guard) rather than silently
-    merge the cells."""
+    """Two distinct (combo, bucket) cells can spell one feature name when
+    domain values contain underscores — every pivoting/rollup compiler
+    must refuse (via the spec-level name-collision guard) rather than
+    silently merge the cells."""
     spec = FeatureSpec(
         key="customer_id",
         time_col="t_minus",
@@ -532,6 +467,7 @@ def test_pivot_rollup_rejects_ambiguous_underscore_domains(spark,
             ),
         ),
     )
-    with pytest.raises(ValueError, match="collide"):
-        compile_pivot_rollup(spec, tiny_transactions)
-
+    for compiler in (compile_bucket_pivot, compile_bucket_rollup,
+                     compile_features):
+        with pytest.raises(ValueError, match="collide"):
+            compiler(spec, tiny_transactions)

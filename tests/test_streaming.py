@@ -33,7 +33,9 @@ def _drain_available(q, timeout=120, idle_batches=2):
     spinning cleanup batches through every later test. Data-closed
     emissions are committed with their data batch, so "≥1 data batch
     seen, then ``idle_batches`` zero-row batches committed" is the
-    correct sink-complete condition for these tests."""
+    correct sink-complete condition for these tests. A query that
+    stopped on its own re-raises its failure instead of passing as
+    drained."""
     import time as _time
 
     t0 = _time.time()
@@ -43,6 +45,9 @@ def _drain_available(q, timeout=120, idle_batches=2):
     try:
         while _time.time() - t0 < timeout:
             if not q.isActive:
+                exc = q.exception()
+                if exc is not None:
+                    raise exc
                 return
             p = q.lastProgress
             if p is not None and p["batchId"] != last:

@@ -52,9 +52,6 @@ from feature_generation_benchmark_spark.plans import (  # noqa: E402
     compile_bucket_rollup,
     compile_case_when,
 )
-from feature_generation_benchmark_spark.plans.pivot_rollup import (  # noqa: E402
-    compile_pivot_rollup,
-)
 from feature_generation_benchmark_spark.session import get_spark  # noqa: E402
 from feature_generation_benchmark_spark.sources.generator import (  # noqa: E402
     generate_size,
@@ -71,7 +68,6 @@ STRATEGIES = {
     ),
     "bucket_rollup": compile_bucket_rollup,
     "case_when": compile_case_when,
-    "pivot_rollup": compile_pivot_rollup,
 }
 
 
