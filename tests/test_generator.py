@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from feature_generation_benchmark_spark.plans import (
+    compile_bucket_pivot,
     compile_bucket_rollup,
     compile_case_when,
 )
@@ -107,26 +108,32 @@ def test_rate_scale_shrinks_fanout_deterministically(spark, trx):
 
 
 def test_reference_task_2080_features_cross_strategy(spark, trx):
-    """The reference's full 2,080-feature task compiles and the two native
-    strategies agree exactly on generated data (cumulative-window + exact
-    rollup semantics, SURVEY §2.7 fixes)."""
+    """The reference's full 2,080-feature task compiles and every native
+    strategy agrees exactly on generated data (cumulative-window + exact
+    rollup semantics, SURVEY §2.7 fixes) — including ``bucket_pivot`` in
+    both layouts, the plan the planner picks for this task."""
     spec = reference_spec()
     a = compile_case_when(spec, trx)
-    b = compile_bucket_rollup(spec, trx)
     assert len(a.columns) == 2081
     assert a.count() == 60
-    # exact equality modulo float-ulp: compare via round(12) on both
+    # exact equality modulo float-ulp: compare at rel=1e-9
     cols = a.columns
     ra = {r["customer_id"]: r for r in a.collect()}
-    rb = {r["customer_id"]: r for r in b.collect()}
-    assert ra.keys() == rb.keys()
-    n_checked = 0
-    for k in ra:
-        for c in cols:
-            va, vb = ra[k][c], rb[k][c]
-            if isinstance(va, float):
-                assert va == pytest.approx(vb, rel=1e-9, abs=1e-9), (k, c)
-            else:
-                assert va == vb, (k, c)
-            n_checked += 1
-    assert n_checked == 60 * 2081
+    for b in (
+        compile_bucket_rollup(spec, trx),
+        compile_bucket_pivot(spec, trx),
+        compile_bucket_pivot(spec, trx, key_partitioned=True),
+    ):
+        assert b.columns == cols
+        rb = {r["customer_id"]: r for r in b.collect()}
+        assert ra.keys() == rb.keys()
+        n_checked = 0
+        for k in ra:
+            for c in cols:
+                va, vb = ra[k][c], rb[k][c]
+                if isinstance(va, float):
+                    assert va == pytest.approx(vb, rel=1e-9, abs=1e-9), (k, c)
+                else:
+                    assert va == vb, (k, c)
+                n_checked += 1
+        assert n_checked == 60 * 2081

@@ -120,6 +120,31 @@ def test_bucket_pivot_is_two_shuffles(spark, spec, trx_path):
     assert plan.count("Exchange hashpartitioning") == 2, plan
 
 
+def test_bucket_pivot_reference_plan_size(spark, tmp_path):
+    """The 2,080-feature roll-up reads shared cumulative columns (one per
+    category cell × window × stat) instead of re-adding raw pivot cells
+    per feature: ~54k optimized-plan nodes, where per-feature cell sums
+    gave 205,803. A CollapseProject that re-inlined the shared layer
+    would bring the blow-up back and trip this bound."""
+    from feature_generation_benchmark_spark.plans import compile_bucket_pivot
+    from feature_generation_benchmark_spark.spec import reference_spec
+
+    path = str(tmp_path / "trx.parquet")
+    spark.createDataFrame(
+        [
+            (1, "DC", "home", "web", 5.0, 3),
+            (2, "CC", "children", "mobile", 7.0, 90),
+        ],
+        "customer_id long, card_type string, trx_type string, "
+        "channel string, trx_amnt double, t_minus long",
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    qe = compile_bucket_pivot(reference_spec(), df)._jdf.queryExecution()
+    # every node of the plan JSON carries one "class" key
+    nodes = qe.optimizedPlan().toJSON().count('"class":')
+    assert nodes <= 60_000, nodes
+
+
 def test_bucket_pivot_key_partitioned_single_exchange(spark, spec, trx_path):
     """r6 verdict #3 (big_keys shuffle volume): with key_partitioned=True
     the celled input exchanges ONCE on the key; HashPartitioning(key)
