@@ -1,5 +1,5 @@
 """Physical strategy A2+A3″ — single-pass integer-cell partial aggregation
-+ known-values pivot + arithmetic roll-up. The engine's fastest plan at
++ long-form roll-up + known-values pivot. The engine's fastest plan at
 scale; semantics identical to every other strategy.
 
 Motivation (measured at the reference's medium scale, 1.7B rows): in
@@ -12,48 +12,47 @@ entirely:
 1. Each in-scope row is mapped to one small integer **cell id** encoding
    (all union category values, smallest-window bucket) — a handful of
    codegen'd comparisons per row, done ONCE.
-2. Level 1 aggregates ``{count,sum,min,max}`` by ``(key, cell)``. The
-   shuffle row is ``(long, int, 4 numerics)`` — roughly half the bytes of
-   shuffling category strings (reference pivot key synthesis,
+2. Level 1 aggregates, by ``(key, cell)``, only the stats the spec's aggs
+   read (the row count; per measure its sum, min, max). The shuffle row
+   is ``(long, int, ≤ 4 numerics)`` — roughly half the bytes of shuffling
+   category strings (reference pivot key synthesis,
    ``impl/pyspark-pivot.py:104-105,124``, shuffles concat'd strings).
-3. Level 2 pivots the partials wide with an EXPLICIT integer value list
-   (reference known-values idiom, ``impl/pyspark-pivot.py:106-110,126``).
-   Catalyst's two-phase pivot rewrite turns this into ``PivotFirst`` — an
-   O(1) buffer write per partial row, not a per-feature CASE WHEN.
-4. Level 3 is two arithmetic projections over the ≤ ``n_cells × 4``
-   pivot columns, run once per OUTPUT row (one per key), i.e. ~4 orders
-   of magnitude fewer expression evaluations than re-aggregating
-   partials:
+3. The roll-up happens in LONG form, before the pivot: each partial row
+   fans out to the integer **feature-cell ids** (fids) it feeds — one
+   per (grouping combo, window ≥ the cell's bucket), 2 × up to 8 for the
+   reference task. The cell → fids table is built in Python from the
+   cell layout and indexed by the cell id as one constant (a JSON string
+   that constant folding decodes once), so no join and no per-row CASE
+   WHEN.
+4. The pivot on the fid, with an EXPLICIT integer value list (reference
+   known-values idiom, ``impl/pyspark-pivot.py:106-110,126``), merges the
+   partials per ``(key, fid)`` (sum, sum, min, max) in its own first
+   phase and then lays them out wide with ``PivotFirst`` — an O(1)
+   buffer write per row, not a per-feature CASE WHEN. Each feature then
+   reads its own fid's slots (avg reads two: exact ``avg = Σsum/Σcount``,
+   the §2.7.2-3 fixes, same as the other rollup plans), once per OUTPUT
+   row.
 
-   a. a SHARED layer with one column per used category cell (the union
-      cell without its bucket) × window × needed stat: the cell's
-      buckets ``0..w`` combined by coalesce-safe ``+`` / null-skipping
-      ``least``/``greatest``;
-   b. the features, each reading the shared columns of its marginal
-      category cells at its own window (2 for the reference task),
-      with exact ``avg = Σsum/Σcount`` (the §2.7.2-3 fixes, same as the
-      other rollup plans).
-
-   Invariant: ``CollapseProject`` does not merge two projections when
-   a non-trivial producer is referenced more than once. In the
-   reference task every shared column is (each cell is read by both
-   groupings, and avg reads count twice), so the shared layer survives
-   optimization; a spec whose shared columns are each read once gets
-   them inlined, which duplicates nothing. Building each feature from
-   raw pivot cells instead re-adds the same prefixes per feature:
-   26,208 cell references and 205,803 optimized-plan nodes for the
-   reference task, against ~54k with the shared layer.
+   Rolling up in a projection above the pivot instead — each feature
+   re-adding its window's buckets from a cell pivot — is what this
+   replaced: 205,803 optimized-plan nodes for the reference task, 53,861
+   with a shared per-cell cumulative layer, 25,276 in long form.
 
 Scale posture: one input scan, one big shuffle (reduced by map-side
 partial aggregation to ≤ |keys| × n_cells rows), one tiny shuffle of
-partials, no join. Cell-domain size is compile-time-known (no discovery
+partials on the key, no join; the fan-out and the pivot run inside the
+last stage. Cell-domain size is compile-time-known (no discovery
 scan); plans stay static. Expressions are built as SQL strings — one JVM
 parse per feature instead of a dozen Py4J round-trips each.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import itertools
+import json
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from feature_generation_benchmark_spark.functions.exprs import (
@@ -62,9 +61,9 @@ from feature_generation_benchmark_spark.functions.exprs import (
 )
 from feature_generation_benchmark_spark.spec import Agg, FeatureSpec
 
-#: Guard: beyond this many cells the pivot row buffer (n_cells × 4 slots
-#: per key) stops being "small state" and the planner should fall back to
-#: ``bucket_rollup``.
+#: Guard: beyond this many cells the cell → fids table and the pivot row
+#: buffer (one slot per fid × stat per key) stop being "small state" and
+#: the planner should fall back to ``bucket_rollup``.
 MAX_CELLS = 100_000
 
 
@@ -143,88 +142,93 @@ def _cell_sql(
     return f"CAST(({expr} * {len(spec.windows)} + {_bucket_idx_case(spec)}) AS INT)"
 
 
-def _marginal_cells(
-    doms: list[tuple[str, tuple[str, ...], bool]], feat
-) -> list[int]:
-    """Category-cell ids (the union cell without its bucket) contributing
-    to one feature: fix the feature's own category values, marginalize
-    over the other union columns (INCLUDING their overflow slot —
-    out-of-domain there doesn't exclude a row from this feature)."""
-    fixed = dict(zip(feat.grouping.cols, feat.combo))
-    cells = [0]
-    for col, dom, overflow in doms:
-        r = _radix(dom, overflow)
-        if col in fixed:
-            choices = [dom.index(fixed[col])]
-        else:
-            choices = list(range(r))
-        cells = [c * r + i for c in cells for i in choices]
-    return cells
-
-
-def _stats(spec: FeatureSpec) -> list[tuple[str, str]]:
-    """``(kind, pivot-column suffix)`` of the partial stats the spec's aggs
-    read: ``cnt`` for count/avg, ``sum`` for sum/avg, ``min``, ``max``."""
+def _stats(spec: FeatureSpec) -> list[tuple[str, Column, Column]]:
+    """``(suffix, level-1 partial, merge of partials)`` of each stat the
+    spec's aggs read: the row count for count/avg, and per measure its
+    sum for sum/avg, its min and its max."""
     aggs = set(spec.aggs)
     out = []
     if aggs & {Agg.COUNT, Agg.AVG}:
-        out.append(("cnt", "cnt"))
+        out.append(("cnt", F.count(F.lit(1)), F.sum("cnt")))
     for m in spec.measures:
         if aggs & {Agg.SUM, Agg.AVG}:
-            out.append(("sum", f"sum_{m}"))
+            out.append((f"sum_{m}", F.sum(m), F.sum(f"sum_{m}")))
         if Agg.MIN in aggs:
-            out.append(("min", f"min_{m}"))
+            out.append((f"min_{m}", F.min(m), F.min(f"min_{m}")))
         if Agg.MAX in aggs:
-            out.append(("max", f"max_{m}"))
+            out.append((f"max_{m}", F.max(m), F.max(f"max_{m}")))
     return out
 
 
-def _cum_name(cell: int, w: int, suffix: str) -> str:
-    return f"__cum{cell}_{w}_{suffix}"
+def _fid_bases(spec: FeatureSpec) -> list[int]:
+    """First feature-cell id (fid) of each grouping, then the total.
+    Grouping ``g``'s combo ``c`` (in ``Grouping.combos()`` order) at
+    window index ``w`` is ``fid = bases[g] + c·nw + w``."""
+    bases = [0]
+    for g in spec.groupings:
+        n_combos = math.prod(len(dom) for dom in g.domains)
+        bases.append(bases[-1] + n_combos * len(spec.windows))
+    return bases
 
 
-def _extreme(kind: str, refs: list[str]) -> str:
-    """Null-skipping min (``kind == "min"``) or max over ``refs``."""
-    if len(refs) == 1:
-        return refs[0]
-    return f"{'least' if kind == 'min' else 'greatest'}({', '.join(refs)})"
+def _fanout_sql(
+    spec: FeatureSpec, doms: list[tuple[str, tuple[str, ...], bool]]
+) -> str:
+    """The fids each union cell feeds, one row per fid: for every
+    grouping whose columns are all in domain at the cell, its combo at
+    every window ``≥`` the cell's bucket. The table is built here over
+    the mixed-radix layout of :func:`_cell_sql` and applied as ONE
+    literal indexed by the cell id. Cells that feed nothing (the dead
+    cell, or out of domain in some column of every grouping) map to an
+    empty list, which ``explode_outer`` turns into a NULL fid: the key
+    keeps its row and its features stay empty."""
+    nw = len(spec.windows)
+    bases = _fid_bases(spec)
+    pos = {col: i for i, (col, _, _) in enumerate(doms)}
+    rows = []
+    for idx in itertools.product(*[range(_radix(d, o)) for _, d, o in doms]):
+        starts = []  # fid of window 0 for each grouping this cell feeds
+        for g, base in zip(spec.groupings, bases):
+            combo = 0
+            for col, dom in zip(g.cols, g.domains):
+                i = idx[pos[col]]
+                if i == len(dom):  # the overflow slot: outside g's domain
+                    break
+                combo = combo * len(dom) + i
+            else:
+                starts.append(base + combo * nw)
+        for b in range(nw):  # the cell's bucket
+            rows.append([s + w for s in starts for w in range(b, nw)])
+    rows.append([])  # the dead cell
+    # one string literal that constant folding decodes once: the same
+    # table as nested array(...) calls costs ~10× more to analyze
+    table = quote_str(json.dumps(rows, separators=(",", ":")))
+    return (
+        f"explode_outer(element_at(from_json({table}, 'array<array<int>>'),"
+        " __cell + 1))"
+    )
 
 
-def _cumulative_sql(kind: str, suffix: str, cell: int, w: int, nw: int) -> str:
-    """Category cell ``cell`` over buckets ``0..w``, i.e. its value for
-    the cumulative window ``windows[w]``: coalesce-safe ``+`` for counts
-    and sums (never NULL), null-skipping ``least``/``greatest`` for
-    min/max (NULL when every bucket is empty)."""
-    refs = [quote_ident(f"{cell * nw + b}_{suffix}") for b in range(w + 1)]
-    if kind == "cnt":
-        expr = " + ".join(f"coalesce({r}, 0)" for r in refs)
-    elif kind == "sum":
-        expr = " + ".join(f"coalesce({r}, CAST(0 AS DOUBLE))" for r in refs)
-    else:
-        expr = _extreme(kind, refs)
-    return f"{expr} AS {quote_ident(_cum_name(cell, w, suffix))}"
+def _feature_sql(spec: FeatureSpec, feat, fid: int, one_stat: bool) -> str:
+    """One feature from its own fid's pivot slots, with the canonical
+    empty-group encoding: count 0, sum 0.0, NULL avg/min/max, and the
+    exact ``avg = Σsum/Σcount``. Spark names a single-aggregate pivot's
+    columns by the value alone (``one_stat``)."""
 
+    def slot(suffix: str) -> str:
+        return quote_ident(str(fid) if one_stat else f"{fid}_{suffix}")
 
-def _rollup_sql(spec: FeatureSpec, feat, cells: list[int]) -> str:
-    """One feature from the cumulative columns of its marginal cells at
-    its own window."""
-    w = spec.windows.index(feat.window)
-
-    def refs(suffix: str) -> list[str]:
-        return [quote_ident(_cum_name(c, w, suffix)) for c in cells]
-
-    cnt = " + ".join(refs("cnt"))
+    cnt = f"coalesce({slot('cnt')}, 0)"
     if feat.agg is Agg.COUNT:
-        return f"CAST({cnt} AS BIGINT) AS {quote_ident(feat.name)}"
+        return f"{cnt} AS {quote_ident(feat.name)}"
     m = feat.measure
+    total = f"coalesce({slot(f'sum_{m}')}, CAST(0 AS DOUBLE))"
     if feat.agg is Agg.SUM:
-        expr = " + ".join(refs(f"sum_{m}"))
+        expr = total
     elif feat.agg is Agg.AVG:
-        total = " + ".join(refs(f"sum_{m}"))
-        expr = f"CASE WHEN ({cnt}) > 0 THEN ({total}) / ({cnt}) END"
+        expr = f"CASE WHEN {cnt} > 0 THEN {total} / {cnt} END"
     elif feat.agg in (Agg.MIN, Agg.MAX):
-        kind = feat.agg.value
-        expr = _extreme(kind, refs(f"{kind}_{m}"))
+        expr = slot(f"{feat.agg.value}_{m}")
     else:  # pragma: no cover
         raise ValueError(f"unknown agg {feat.agg}")
     if spec.round_decimals is not None:
@@ -248,24 +252,24 @@ def compile_bucket_pivot(
 ) -> DataFrame:
     """Compile ``spec`` into the integer-cell pivot plan.
 
-    ``key_partitioned`` (r6 verdict #3 — the big_keys shuffle-volume
-    axis): the default layout exchanges TWICE — map-combined partials on
-    ``(key, cell)``, then the pivot re-exchanges |keys|×cells partial
-    rows on ``key``. With ~1M keys the partial rows approach input size,
-    so both exchanges carry ~full-input volume and the second is pure
-    waste. ``key_partitioned=True`` hash-partitions the celled input on
-    the KEY once; ``HashPartitioning(keys)`` satisfies the clustered
-    distribution of BOTH downstream aggregates (keys ⊆ (keys, cell)),
-    so the partial agg and the pivot run exchange-free in the same
-    stage — ONE exchange total (plan-guarded by
-    ``test_bucket_pivot_key_partitioned_single_exchange``).
+    The two layouts differ only in where the one ``repartition(key)``
+    sits; ``HashPartitioning(keys)`` satisfies the clustered
+    distribution of every aggregate downstream of it ((key, cell),
+    (key, fid), key), so none of them adds an exchange:
+
+    - default: after the level-1 aggregate, so its map-side combine on
+      ``(key, cell)`` is kept — TWO exchanges (that aggregate's, then the
+      combined partials on the key; plan-guarded by
+      ``test_bucket_pivot_is_two_shuffles``);
+    - ``key_partitioned=True``: before it, on the raw celled rows — ONE
+      exchange (``test_bucket_pivot_key_partitioned_single_exchange``).
 
     Trade-off: the single exchange moves RAW celled rows (no map-side
-    combine), so this layout loses when combine is effective — few keys
-    × many rows (medium: 100k keys × 1.7B rows, ~130 rows/key/task). It wins
-    in the high-key-cardinality regime where rows-per-(key,cell)-per-
-    task ≈ 1 and combine never fires: there the default's two ~input-
-    sized exchanges become one. Callers pick per workload (the
+    combine), so keypart loses when combine is effective — few keys ×
+    many rows (medium: 100k keys × 1.7B rows, ~130 rows/key/task). It
+    wins in the high-key-cardinality regime where rows-per-(key,cell)-
+    per-task ≈ 1 and combine never fires: there the default's two
+    ~input-sized exchanges become one. Callers pick per workload (the
     cross-strategy property suite pins both layouts to identical
     results)."""
     doms = _union_domains(spec)
@@ -281,62 +285,49 @@ def compile_bucket_pivot(
     # NULL cell = in time scope but blocked from every grouping (out of a
     # closed/everywhere-used domain). Canonical semantics still show the
     # KEY (with all-empty features) for such rows, so they aggregate into
-    # a dedicated DEAD cell that is pivoted but referenced by no feature.
+    # a dedicated DEAD cell that feeds no fid.
     dead_cell = n_cells
+    keys = [F.col(k) for k in spec.keys]
     celled = in_scope.select(
-        *[F.col(k) for k in spec.keys],
+        *keys,
         F.coalesce(
             F.expr(_cell_sql(spec, doms)), F.lit(dead_cell)
         ).alias("__cell"),
         *[F.col(m) for m in spec.measures],
     )
 
-    # one shared row count + {sum,min,max} per measure: k measures widen
-    # the partial/pivot rows by 3k numerics, no extra scan or shuffle
-    partial_aggs = [F.count(F.lit(1)).alias("cnt")]
-    pivot_aggs = [F.first("cnt").alias("cnt")]
-    for m in spec.measures:
-        partial_aggs += [
-            F.sum(F.col(m)).alias(f"sum_{m}"),
-            F.min(F.col(m)).alias(f"min_{m}"),
-            F.max(F.col(m)).alias(f"max_{m}"),
-        ]
-        pivot_aggs += [
-            F.first(f"sum_{m}").alias(f"sum_{m}"),
-            F.first(f"min_{m}").alias(f"min_{m}"),
-            F.first(f"max_{m}").alias(f"max_{m}"),
-        ]
+    # level 1: only the stats the spec's aggs read, on (key, cell)
+    stats = _stats(spec)
     if key_partitioned:
-        # one user exchange on the key; both aggregates below then run
-        # exchange-free (HashPartitioning(keys) satisfies their
-        # clustering requirements)
-        celled = celled.repartition(*[F.col(k) for k in spec.keys])
-    partial = celled.groupBy(*spec.keys, "__cell").agg(*partial_aggs)
-
+        celled = celled.repartition(*keys)
+    partial = celled.groupBy(*spec.keys, "__cell").agg(
+        *[part.alias(suffix) for suffix, part, _ in stats]
+    )
+    if not key_partitioned:
+        # after the map-combined (key, cell) exchange, so combine is kept
+        partial = partial.repartition(*keys)
+    # HashPartitioning(keys) now satisfies every aggregate below: the
+    # pivot's own (key, fid) phase and its PivotFirst phase add no exchange
+    fanned = partial.select(
+        *keys,
+        F.expr(_fanout_sql(spec, doms)).alias("__fid"),
+        *[F.col(suffix) for suffix, _, _ in stats],
+    )
+    n_fids = _fid_bases(spec)[-1]
     pivoted = (
-        partial.groupBy(*spec.keys)
-        .pivot("__cell", list(range(n_cells + 1)))  # +1: the dead cell
-        .agg(*pivot_aggs)
+        fanned.groupBy(*spec.keys)
+        .pivot("__fid", list(range(n_fids)))
+        .agg(*[merge.alias(suffix) for suffix, _, merge in stats])
     )
 
-    # Level 3 (module docstring, step 4): shared cumulative columns per
-    # used category cell × window × stat, then the features over them.
-    keys = [quote_ident(k) for k in spec.keys]
-    nw = len(spec.windows)
-    features = spec.features()
-    cells_of = [_marginal_cells(doms, feat) for feat in features]
-    used = sorted({c for cells in cells_of for c in cells})
-    shared = pivoted.selectExpr(
-        *keys,
-        *[
-            _cumulative_sql(kind, suffix, c, w, nw)
-            for c in used
-            for w in range(nw)
-            for kind, suffix in _stats(spec)
-        ],
-    )
+    # features() runs grouping → combo → window → agg → measure and the
+    # fids run grouping → combo → window, so feature i reads fid i // per
+    per = len(spec.aggs) * len(spec.measures)
     # one Py4J call + one parse each, instead of 2080 F.expr round-trips
-    return shared.selectExpr(
-        *keys,
-        *[_rollup_sql(spec, f, cells) for f, cells in zip(features, cells_of)],
+    return pivoted.selectExpr(
+        *[quote_ident(k) for k in spec.keys],
+        *[
+            _feature_sql(spec, f, i // per, len(stats) == 1)
+            for i, f in enumerate(spec.features())
+        ],
     )

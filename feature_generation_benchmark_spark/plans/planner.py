@@ -36,13 +36,14 @@ CASE_WHEN_MAX_FEATURES = 64
 
 
 #: Layout crossover for ``bucket_pivot`` (see ``choose_bucket_pivot_layout``):
-#: switch to the single-exchange key-partitioned layout once the pivot
-#: exchange's |keys|×|cells| partial rows exceed this fraction of the input
-#: rows. Calibrated on the r7 same-session A/Bs (RESULTS.md): big_keys
-#: ratio 0.34 → keypart 2.31× faster; medium ratio 0.024 → default
-#: faster. The partial rows carry 4 aggregate slots per cell, so they are
-#: heavier than raw rows — a ratio ≳ 0.1 means the default's two
-#: exchanges move ≈ 2× input volume where keypart moves it once.
+#: switch to the single-exchange key-partitioned layout once the default
+#: layout's second exchange (|keys|×|cells| partial rows, on the key)
+#: exceeds this fraction of the input rows. Calibrated on same-session
+#: A/Bs (RESULTS.md): big_keys ratio 0.34 → keypart 2.31× faster; medium
+#: ratio 0.024 → default faster. The partial rows carry up to 4 aggregate
+#: slots per cell, so they are heavier than raw rows — a ratio ≳ 0.1
+#: means the default's two exchanges move ≈ 2× input volume where keypart
+#: moves it once.
 KEYPART_MIN_PARTIAL_TO_INPUT = 0.1
 
 
@@ -106,7 +107,7 @@ def compile_features(
     rows and distinct keys. When both are given and the strategy resolves
     to ``bucket_pivot``, the planner also picks its exchange layout
     (:func:`choose_bucket_pivot_layout`) — at high key cardinality the
-    single-exchange key-partitioned layout is 2.31× faster (big_keys r7
+    single-exchange key-partitioned layout is 2.31× faster (big_keys
     A/B); without hints the default two-exchange layout is kept (right
     whenever map-side combine fires, which is the common case).
     """

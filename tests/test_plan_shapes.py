@@ -121,11 +121,12 @@ def test_bucket_pivot_is_two_shuffles(spark, spec, trx_path):
 
 
 def test_bucket_pivot_reference_plan_size(spark, tmp_path):
-    """The 2,080-feature roll-up reads shared cumulative columns (one per
-    category cell × window × stat) instead of re-adding raw pivot cells
-    per feature: ~54k optimized-plan nodes, where per-feature cell sums
-    gave 205,803. A CollapseProject that re-inlined the shared layer
-    would bring the blow-up back and trip this bound."""
+    """The 2,080-feature roll-up happens in long form before the pivot:
+    each partial row fans out to the feature cells (grouping combo ×
+    window) it feeds, and each feature reads its own cell's pivot slots
+    (avg reads two). The optimized plan has ~25k nodes; re-adding the
+    window's buckets in a projection above the pivot gave 53,861 with a
+    shared cumulative layer and 205,803 without one."""
     from feature_generation_benchmark_spark.plans import compile_bucket_pivot
     from feature_generation_benchmark_spark.spec import reference_spec
 
@@ -142,7 +143,32 @@ def test_bucket_pivot_reference_plan_size(spark, tmp_path):
     qe = compile_bucket_pivot(reference_spec(), df)._jdf.queryExecution()
     # every node of the plan JSON carries one "class" key
     nodes = qe.optimizedPlan().toJSON().count('"class":')
-    assert nodes <= 60_000, nodes
+    assert nodes <= 30_000, nodes
+
+
+def test_bucket_pivot_aggregates_only_the_stats_the_aggs_read(
+    spark, trx_path
+):
+    """A count-only spec carries the row count through the partial
+    aggregate and the pivot, and no measure sum/min/max. Checked on the
+    analyzed plan: the optimizer would prune unread aggregates anyway,
+    but only after analysis has paid for every one of them."""
+    from feature_generation_benchmark_spark.plans import compile_bucket_pivot
+    from feature_generation_benchmark_spark.spec import Agg
+
+    count_only = FeatureSpec(
+        key="customer_id",
+        time_col="t_minus",
+        measure="trx_amnt",
+        windows=(7, 14, 30),
+        groupings=(Grouping(cols=("card_type",), domains=(("DC", "CC"),)),),
+        aggs=(Agg.COUNT,),
+    )
+    df = compile_bucket_pivot(count_only, spark.read.parquet(trx_path))
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "count(" in plan, plan
+    for agg in ("min(", "max(", "sum(trx_amnt"):
+        assert agg not in plan, (agg, plan)
 
 
 def test_bucket_pivot_key_partitioned_single_exchange(spark, spec, trx_path):

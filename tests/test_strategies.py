@@ -285,6 +285,43 @@ def test_out_of_domain_rows_count_for_unrelated_groupings(spark):
         assert row["a1_1d_count"] == 1, compiler.__name__
 
 
+def test_key_with_only_dead_cell_rows_keeps_empty_features(spark):
+    """A key whose only in-window row is out of the domain of a column
+    EVERY grouping uses (``ca="zz"``) feeds no feature, yet still appears
+    with the empty-group encoding: count 0, sum 0.0, NULL avg/min/max.
+    In bucket_pivot that row lands in the dead cell, which fans out to no
+    fid; a plain ``explode`` would drop the key."""
+    spec = FeatureSpec(
+        key="k",
+        time_col="t",
+        measure="m",
+        windows=(1, 5),
+        groupings=(Grouping(cols=("ca",), domains=(("a1", "a2"),)),),
+    )
+    df = spark.createDataFrame(
+        [(0, "a1", 0, 1.0), (1, "zz", 0, 3.0), (2, "a1", 9, 4.0)],
+        "k long, ca string, t long, m double",
+    )
+    compilers = {
+        "case_when": compile_case_when,
+        "bucket_pivot": compile_bucket_pivot,
+        "bucket_pivot_keypart": lambda s, d: compile_bucket_pivot(
+            s, d, key_partitioned=True
+        ),
+    }
+    for name, compiler in compilers.items():
+        rows = {r["k"]: r.asDict() for r in compiler(spec, df).collect()}
+        assert sorted(rows) == [0, 1], name  # key 2 is out of window
+        dead = rows[1]
+        for combo in ("a1", "a2"):
+            for w in (1, 5):
+                assert dead[f"{combo}_{w}d_count"] == 0, name
+                assert dead[f"{combo}_{w}d_sum"] == 0.0, name
+                for agg in ("avg", "min", "max"):
+                    assert dead[f"{combo}_{w}d_{agg}"] is None, (name, agg)
+        assert rows[0]["a1_1d_count"] == 1, name
+
+
 def test_closed_domains_keep_minimal_cell_count():
     """closed=True (reference task: generator domains are complete) must
     keep the at-scale pivot at its minimal width; the open default pays
