@@ -2,9 +2,9 @@
 
 These correspond to the reference's scalar-expression surface (SURVEY §2.2):
 window-membership predicates (P1), category equality (P2), conjunction (P3),
-conditional masking (P4), first-match window bucketing (P5). All are plain
-Catalyst ``Column`` trees — JVM-side, whole-stage-codegen friendly; no Python
-executes at run time.
+conditional masking (P4). All are plain Catalyst ``Column`` trees — JVM-side,
+whole-stage-codegen friendly; no Python executes at run time. First-match
+window bucketing (P5) is ``plans/bucket_pivot.py::_bucket_idx_case``.
 """
 
 from __future__ import annotations
@@ -104,18 +104,3 @@ def agg_expr_sql(spec: FeatureSpec, feat: Feature) -> str:
     if feat.agg is not Agg.COUNT and spec.round_decimals is not None:
         expr = f"round({expr}, {spec.round_decimals})"
     return f"{expr} AS {quote_ident(feat.name)}"
-
-
-def smallest_window_bucket(time_col: str, windows: tuple[int, ...]) -> Column:
-    """First-match disjoint bucketing: assign each row its *smallest*
-    enclosing window (reference ``impl/pyspark-pivot.py:113-123``). Rows
-    beyond the largest window get NULL and are later dropped — the
-    reference's silent ``t_minus > max`` exclusion (SURVEY §2.7.5), which we
-    make explicit with a filter at the call site.
-    """
-    expr: Column | None = None
-    for w in windows:
-        clause = (F.col(time_col) <= F.lit(w), F.lit(w))
-        expr = F.when(*clause) if expr is None else expr.when(*clause)
-    assert expr is not None
-    return expr

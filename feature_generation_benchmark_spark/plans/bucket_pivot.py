@@ -1,42 +1,42 @@
 """Physical strategy A2+A3″ — single-pass integer-cell partial aggregation
-+ long-form roll-up + known-values pivot. The engine's fastest plan at
-scale; semantics identical to every other strategy.
++ long-form roll-up + known-values pivot. The engine's one bucketed plan:
+the planner picks it for every wide spec, and incremental serving
+(``plans/incremental.py``) runs its roll-up over day partials.
+Semantics identical to every other strategy.
 
-Motivation (measured at the reference's medium scale, 1.7B rows): in
-``plans/bucket_rollup.py`` the second aggregation evaluates every feature's
-CASE WHEN — with *string* equality on category columns — against every
-partial row: ~33M partials × 2,080 conditions ≈ 69 billion predicate
-evaluations, which dominates the run. This plan removes that cost
-entirely:
+Motivation (measured at the reference's medium scale, 1.7B rows): a
+second aggregation that evaluates every feature's CASE WHEN — with
+*string* equality on category columns — against every partial row costs
+~33M partials × 2,080 conditions ≈ 69 billion predicate evaluations,
+which dominates the run. This plan removes that cost entirely:
 
-1. Each in-scope row is mapped to one small integer **cell id** encoding
+1. Each in-scope row is mapped to one integer **cell id** encoding
    (all union category values, smallest-window bucket) — a handful of
    codegen'd comparisons per row, done ONCE.
 2. Level 1 aggregates, by ``(key, cell)``, only the stats the spec's aggs
    read (the row count; per measure its sum, min, max). The shuffle row
-   is ``(long, int, ≤ 4 numerics)`` — roughly half the bytes of shuffling
-   category strings (reference pivot key synthesis,
+   is ``(long, long, ≤ 4 numerics)`` — roughly half the bytes of
+   shuffling category strings (reference pivot key synthesis,
    ``impl/pyspark-pivot.py:104-105,124``, shuffles concat'd strings).
 3. The roll-up happens in LONG form, before the pivot: each partial row
    fans out to the integer **feature-cell ids** (fids) it feeds — one
    per (grouping combo, window ≥ the cell's bucket), 2 × up to 8 for the
-   reference task. The cell → fids table is built in Python from the
-   cell layout and indexed by the cell id as one constant (a JSON string
-   that constant folding decodes once), so no join and no per-row CASE
-   WHEN.
+   reference task. The fids are decoded from the cell id by integer
+   arithmetic (each column's digit, then one ``sequence`` per grouping),
+   so no join, no per-row CASE WHEN, and nothing whose size grows with
+   the number of cells.
 4. The pivot on the fid, with an EXPLICIT integer value list (reference
    known-values idiom, ``impl/pyspark-pivot.py:106-110,126``), merges the
    partials per ``(key, fid)`` (sum, sum, min, max) in its own first
    phase and then lays them out wide with ``PivotFirst`` — an O(1)
    buffer write per row, not a per-feature CASE WHEN. Each feature then
    reads its own fid's slots (avg reads two: exact ``avg = Σsum/Σcount``,
-   the §2.7.2-3 fixes, same as the other rollup plans), once per OUTPUT
-   row.
+   the §2.7.2-3 fixes), once per OUTPUT row.
 
    Rolling up in a projection above the pivot instead — each feature
    re-adding its window's buckets from a cell pivot — is what this
    replaced: 205,803 optimized-plan nodes for the reference task, 53,861
-   with a shared per-cell cumulative layer, 25,276 in long form.
+   with a shared per-cell cumulative layer, 25,433 in long form.
 
 Scale posture: one input scan, one big shuffle (reduced by map-side
 partial aggregation to ≤ |keys| × n_cells rows), one tiny shuffle of
@@ -48,8 +48,6 @@ parse per feature instead of a dozen Py4J round-trips each.
 
 from __future__ import annotations
 
-import itertools
-import json
 import math
 
 from pyspark.sql import Column, DataFrame
@@ -61,10 +59,10 @@ from feature_generation_benchmark_spark.functions.exprs import (
 )
 from feature_generation_benchmark_spark.spec import Agg, FeatureSpec
 
-#: Guard: beyond this many cells the cell → fids table and the pivot row
-#: buffer (one slot per fid × stat per key) stop being "small state" and
-#: the planner should fall back to ``bucket_rollup``.
-MAX_CELLS = 100_000
+#: Cell ids are BIGINT, the dead cell included: a layout of this many
+#: cells or more has no id. A range check, not a tuning knob — the planner
+#: sends such specs to ``case_when``.
+CELL_ID_LIMIT = 1 << 62
 
 
 def _union_domains(
@@ -127,19 +125,18 @@ def _bucket_idx_case(spec: FeatureSpec) -> str:
 def _cell_sql(
     spec: FeatureSpec, doms: list[tuple[str, tuple[str, ...], bool]]
 ) -> str:
-    """One integer per (category values..., bucket): mixed-radix encoding
+    """One BIGINT per (category values..., bucket): mixed-radix encoding
     over each column's radix (domain size, +1 where the overflow slot
-    exists). A NULL cell id — out-of-domain in a column EVERY grouping
-    uses, or out-of-window time — marks a row that contributes to no
-    feature; the compiler filters those before aggregating."""
-    expr = ""
-    for col, dom, overflow in doms:
+    exists), cast before the first multiplication so no partial product
+    can overflow INT. A NULL cell id — out-of-domain in a column EVERY
+    grouping uses — marks a row that contributes to no feature; the
+    compiler sends those to the dead cell."""
+    expr = "CAST(0 AS BIGINT)"  # every grouping is cols=(): bucket = cell
+    for i, (col, dom, overflow) in enumerate(doms):
         idx = _idx_case(col, dom, overflow)
         r = _radix(dom, overflow)
-        expr = idx if not expr else f"({expr} * {r} + {idx})"
-    if not expr:
-        expr = "0"  # every grouping is cols=(): the bucket IS the cell
-    return f"CAST(({expr} * {len(spec.windows)} + {_bucket_idx_case(spec)}) AS INT)"
+        expr = f"({expr} * {r} + {idx})" if i else f"CAST({idx} AS BIGINT)"
+    return f"({expr} * {len(spec.windows)} + {_bucket_idx_case(spec)})"
 
 
 def _stats(spec: FeatureSpec) -> list[tuple[str, Column, Column]]:
@@ -172,40 +169,49 @@ def _fid_bases(spec: FeatureSpec) -> list[int]:
 
 
 def _fanout_sql(
-    spec: FeatureSpec, doms: list[tuple[str, tuple[str, ...], bool]]
+    spec: FeatureSpec,
+    doms: list[tuple[str, tuple[str, ...], bool]],
+    dead_cell: int,
 ) -> str:
-    """The fids each union cell feeds, one row per fid: for every
-    grouping whose columns are all in domain at the cell, its combo at
-    every window ``≥`` the cell's bucket. The table is built here over
-    the mixed-radix layout of :func:`_cell_sql` and applied as ONE
-    literal indexed by the cell id. Cells that feed nothing (the dead
-    cell, or out of domain in some column of every grouping) map to an
-    empty list, which ``explode_outer`` turns into a NULL fid: the key
-    keeps its row and its features stay empty."""
+    """The fids each cell feeds, one row per fid, decoded from the cell id
+    by the mixed-radix layout of :func:`_cell_sql`: column ``c``'s index
+    is ``(__cell div stride_c) % radix_c`` and the bucket ``__cell % nw``.
+    Every grouping whose columns are all in domain at the cell (only an
+    overflow slot can be out) feeds its combo at every window ``≥`` the
+    bucket: ``sequence(base + combo·nw + bucket, base + combo·nw + nw−1)``.
+    A cell that feeds nothing (out of domain in some column of every
+    grouping) flattens to an empty array and the dead cell, which would
+    decode as cell 0, maps to NULL; ``explode_outer`` turns either into
+    one NULL fid, so the key keeps its row and its features stay empty."""
     nw = len(spec.windows)
-    bases = _fid_bases(spec)
-    pos = {col: i for i, (col, _, _) in enumerate(doms)}
-    rows = []
-    for idx in itertools.product(*[range(_radix(d, o)) for _, d, o in doms]):
-        starts = []  # fid of window 0 for each grouping this cell feeds
-        for g, base in zip(spec.groupings, bases):
-            combo = 0
-            for col, dom in zip(g.cols, g.domains):
-                i = idx[pos[col]]
-                if i == len(dom):  # the overflow slot: outside g's domain
-                    break
-                combo = combo * len(dom) + i
-            else:
-                starts.append(base + combo * nw)
-        for b in range(nw):  # the cell's bucket
-            rows.append([s + w for s in starts for w in range(b, nw)])
-    rows.append([])  # the dead cell
-    # one string literal that constant folding decodes once: the same
-    # table as nested array(...) calls costs ~10× more to analyze
-    table = quote_str(json.dumps(rows, separators=(",", ":")))
+    idx, stride = {}, nw
+    for col, dom, overflow in reversed(doms):
+        r = _radix(dom, overflow)
+        idx[col] = f"((__cell div {stride}) % {r})"
+        stride *= r
+    overflowing = {col for col, _, overflow in doms if overflow}
+    arrays = []
+    for g, base in zip(spec.groupings, _fid_bases(spec)):
+        combo = ""  # mixed radix over g's domains: Grouping.combos() order
+        for col, dom in zip(g.cols, g.domains):
+            digit = idx[col]
+            combo = f"({combo} * {len(dom)} + {digit})" if combo else digit
+        start = f"{base} + {combo} * {nw}" if combo else str(base)
+        fids = f"sequence({start} + __cell % {nw}, {start} + {nw - 1})"
+        in_domain = [
+            f"{idx[col]} < {len(dom)}"
+            for col, dom in zip(g.cols, g.domains)
+            if col in overflowing
+        ]
+        if in_domain:
+            fids = (
+                f"CASE WHEN {' AND '.join(in_domain)} THEN {fids}"
+                " ELSE CAST(array() AS ARRAY<BIGINT>) END"
+            )
+        arrays.append(fids)
     return (
-        f"explode_outer(element_at(from_json({table}, 'array<array<int>>'),"
-        " __cell + 1))"
+        f"explode_outer(CASE WHEN __cell < {dead_cell} "
+        f"THEN flatten(array({', '.join(arrays)})) END)"
     )
 
 
@@ -271,29 +277,50 @@ def compile_bucket_pivot(
     per-task ≈ 1 and combine never fires: there the default's two
     ~input-sized exchanges become one. Callers pick per workload (the
     cross-strategy property suite pins both layouts to identical
-    results)."""
-    doms = _union_domains(spec)
-    n_cells = n_union_cells(spec)
-    if n_cells > MAX_CELLS:
-        raise ValueError(
-            f"{n_cells} cells exceed MAX_CELLS={MAX_CELLS}; "
-            "use compile_bucket_rollup"
-        )
+    results).
 
-    pruned = df.select(*spec.input_columns())
-    in_scope = pruned.filter(F.col(spec.time_col) <= F.lit(max(spec.windows)))
+    Raises ``ValueError`` before touching ``df`` when the spec has
+    ``CELL_ID_LIMIT`` cells or more."""
+    return _rollup(
+        spec,
+        df,
+        list(spec.measures),
+        [part for _, part, _ in _stats(spec)],
+        key_partitioned,
+    )
+
+
+def _rollup(
+    spec: FeatureSpec,
+    df: DataFrame,
+    carry: list[str],
+    level1: list[Column],
+    key_partitioned: bool,
+) -> DataFrame:
+    """Cell ids, level 1, fan-out, pivot and features over ``df``, which
+    holds the keys, the grouping columns, ``spec.time_col`` and the
+    ``carry`` columns that ``level1`` aggregates into each of
+    :func:`_stats`'s suffixes (raw measures for batch, day partials'
+    stats for incremental serving)."""
+    n_cells = n_union_cells(spec)
+    if n_cells >= CELL_ID_LIMIT:
+        raise ValueError(
+            f"{n_cells} union cells do not fit a BIGINT cell id "
+            f"(CELL_ID_LIMIT={CELL_ID_LIMIT}); use compile_case_when"
+        )
+    doms = _union_domains(spec)
+    in_scope = df.filter(F.col(spec.time_col) <= F.lit(max(spec.windows)))
     # NULL cell = in time scope but blocked from every grouping (out of a
     # closed/everywhere-used domain). Canonical semantics still show the
     # KEY (with all-empty features) for such rows, so they aggregate into
-    # a dedicated DEAD cell that feeds no fid.
-    dead_cell = n_cells
+    # a dedicated DEAD cell, id n_cells, that feeds no fid.
     keys = [F.col(k) for k in spec.keys]
     celled = in_scope.select(
         *keys,
-        F.coalesce(
-            F.expr(_cell_sql(spec, doms)), F.lit(dead_cell)
-        ).alias("__cell"),
-        *[F.col(m) for m in spec.measures],
+        F.coalesce(F.expr(_cell_sql(spec, doms)), F.lit(n_cells)).alias(
+            "__cell"
+        ),
+        *carry,
     )
 
     # level 1: only the stats the spec's aggs read, on (key, cell)
@@ -301,7 +328,7 @@ def compile_bucket_pivot(
     if key_partitioned:
         celled = celled.repartition(*keys)
     partial = celled.groupBy(*spec.keys, "__cell").agg(
-        *[part.alias(suffix) for suffix, part, _ in stats]
+        *[agg.alias(suffix) for (suffix, _, _), agg in zip(stats, level1)]
     )
     if not key_partitioned:
         # after the map-combined (key, cell) exchange, so combine is kept
@@ -310,7 +337,7 @@ def compile_bucket_pivot(
     # pivot's own (key, fid) phase and its PivotFirst phase add no exchange
     fanned = partial.select(
         *keys,
-        F.expr(_fanout_sql(spec, doms)).alias("__fid"),
+        F.expr(_fanout_sql(spec, doms, n_cells)).alias("__fid"),
         *[F.col(suffix) for suffix, _, _ in stats],
     )
     n_fids = _fid_bases(spec)[-1]

@@ -15,7 +15,7 @@ Physical shape (what Catalyst produces):
 
 Scale posture: shuffle volume is one partial-agg row per (input partition ×
 key) — bounded by keys, not input rows; no driver-side state; plan size grows
-with feature count (the known cost of this strategy — see bucket_rollup for
+with feature count (the known cost of this strategy — see bucket_pivot for
 the at-scale alternative).
 
 Defined semantics note: rows with ``time_col > max(windows)`` are filtered

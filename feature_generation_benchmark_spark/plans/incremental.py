@@ -5,9 +5,11 @@ transactions every run (all 13 impls are full-scan batch jobs). At 100 TB
 that is the dominant recurring cost, and it is unnecessary: every
 canonical aggregate is DECOMPOSABLE (``count/sum/min/max``; ``avg`` is
 derived), so the engine can maintain partial aggregates at **absolute-day
-granularity** — ``(keys…, category cols…, day) → {count, sum, min, max
-per measure}`` — and serve the wide feature table for ANY as-of date by
-re-bucketing those partials, never touching raw data again.
+granularity** — ``(keys…, category cols…, day) → stats`` — and serve the
+wide feature table for ANY as-of date by re-bucketing those partials,
+never touching raw data again. The stats are the ones the spec's aggs
+read, named by ``bucket_pivot._stats``: ``cnt`` (for count/avg) and per
+measure ``sum_<m>`` (sum/avg), ``min_<m>`` and ``max_<m>``.
 
 Why day granularity (not window buckets): trailing windows MOVE — what is
 ``t_minus = 7`` today is ``8`` tomorrow, so bucket-level partials go stale
@@ -25,9 +27,10 @@ The three verbs:
   min/min and max/max combine. Associative and commutative, so loads can
   land in any order.
 - :func:`features_asof` — partials + a reference day → the exact wide
-  feature table the batch strategies produce for that date (same
-  ``Σsum/Σcount`` avg, same empty-cell encoding). Output is verified
-  equal to the full-recompute path (tests + the driver oracle gate).
+  feature table the batch strategies produce for that date, through
+  ``bucket_pivot``'s own roll-up (same ``Σsum/Σcount`` avg, same
+  empty-cell encoding). Output is verified equal to the full-recompute
+  path (tests + the DuckDB oracle gate).
 
 Scale posture: the recurring cost drops from O(raw) to O(new day) for
 maintenance plus O(partials) for serving; partials re-shuffle on the same
@@ -40,16 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from feature_generation_benchmark_spark.functions.exprs import (
-    smallest_window_bucket,
-)
-from feature_generation_benchmark_spark.plans.bucket_rollup import (
-    _BUCKET,
-    _CNT,
-    _max_col,
-    _min_col,
-    _rollup_expr,
-    _sum_col,
+from feature_generation_benchmark_spark.plans.bucket_pivot import (
+    _rollup,
+    _stats,
 )
 from feature_generation_benchmark_spark.spec import FeatureSpec
 
@@ -68,15 +64,9 @@ def compile_day_partials(
     used here — relative time is derived at serve time by
     :func:`features_asof`, which is what keeps partials immutable.
     """
-    cats = _category_cols(spec)
-    aggs = [F.count(F.lit(1)).alias(_CNT)]
-    for m in spec.measures:
-        aggs += [
-            F.sum(F.col(m)).alias(_sum_col(m)),
-            F.min(F.col(m)).alias(_min_col(m)),
-            F.max(F.col(m)).alias(_max_col(m)),
-        ]
-    return df.groupBy(*spec.keys, *cats, day_col).agg(*aggs)
+    return df.groupBy(*spec.keys, *_category_cols(spec), day_col).agg(
+        *[part.alias(suffix) for suffix, part, _ in _stats(spec)]
+    )
 
 
 def merge_day_partials(
@@ -86,18 +76,12 @@ def merge_day_partials(
     one: decomposable re-aggregation over the union."""
     if not partials:
         raise ValueError("at least one partials DataFrame required")
-    cats = _category_cols(spec)
     unioned = partials[0]
     for p in partials[1:]:
         unioned = unioned.unionByName(p)
-    aggs = [F.sum(F.col(_CNT)).alias(_CNT)]
-    for m in spec.measures:
-        aggs += [
-            F.sum(F.col(_sum_col(m))).alias(_sum_col(m)),
-            F.min(F.col(_min_col(m))).alias(_min_col(m)),
-            F.max(F.col(_max_col(m))).alias(_max_col(m)),
-        ]
-    return unioned.groupBy(*spec.keys, *cats, day_col).agg(*aggs)
+    return unioned.groupBy(*spec.keys, *_category_cols(spec), day_col).agg(
+        *[merge.alias(suffix) for suffix, _, merge in _stats(spec)]
+    )
 
 
 def features_asof(
@@ -105,25 +89,36 @@ def features_asof(
 ) -> DataFrame:
     """Serve the wide feature table as of ``ref_day`` from day partials.
 
-    Relative time is derived per partial row (``ref_day − day``), bucketed
-    with the same first-match chain as the batch plans, and re-aggregated
-    with the identical rollup expressions — so the result is bit-equal to
-    running any batch strategy over the data AVAILABLE at ``ref_day`` with
-    ``time_col = ref_day − day``.
+    Relative time is derived per partial row (``time_col = ref_day −
+    day``) and the rows go through ``bucket_pivot``'s own roll-up, with
+    the partials' merges as its level-1 aggregate — so the result equals
+    running any batch strategy over the data AVAILABLE at ``ref_day``
+    with that ``time_col``. The partials are exchanged once, on the key
+    (the key-partitioned layout): one exchange on top of the partials'
+    own.
 
-    Days after ``ref_day`` are excluded (``t_rel >= 0``): a store whose
-    frontier has advanced past ``ref_day`` (continuous loads, then a
-    historical as-of ask) holds future-day partials, and without the lower
-    bound those rows would land in the smallest bucket and inflate every
-    trailing window — the exact look-ahead leak the as-of contract exists
-    to prevent (same guard the point-in-time join in ``workloads/pit.py``
-    enforces on its side).
+    Days after ``ref_day`` are excluded (``time_col >= 0``): a store
+    whose frontier has advanced past ``ref_day`` (continuous loads, then
+    a historical as-of ask) holds future-day partials, and without the
+    lower bound those rows would land in the smallest bucket and inflate
+    every trailing window — the exact look-ahead leak the as-of contract
+    exists to prevent (same guard the point-in-time join in
+    ``workloads/pit.py`` enforces on its side).
     """
-    t_rel = "__t_rel"
-    bucketed = (
-        partials.withColumn(t_rel, F.lit(ref_day) - F.col(day_col))
-        .filter(F.col(t_rel).between(0, max(spec.windows)))
-        .withColumn(_BUCKET, smallest_window_bucket(t_rel, spec.windows))
+    stats = _stats(spec)
+    missing = [s for s, _, _ in stats if s not in partials.columns]
+    if missing:
+        raise ValueError(
+            f"partials lack the stats {missing} this spec's aggs read; "
+            "rebuild them with compile_day_partials for this spec"
+        )
+    aged = partials.withColumn(
+        spec.time_col, F.lit(ref_day) - F.col(day_col)
+    ).filter(F.col(spec.time_col) >= 0)
+    return _rollup(
+        spec,
+        aged,
+        [suffix for suffix, _, _ in stats],
+        [merge for _, _, merge in stats],
+        key_partitioned=True,
     )
-    exprs = [_rollup_expr(spec, feat) for feat in spec.features()]
-    return bucketed.groupBy(*spec.keys).agg(*exprs)

@@ -4,7 +4,9 @@ The reference's four physical strategies are hand-picked per script; the
 benchmark numbers (BASELINE.md) show plan *shape* dominates engine speed
 (39× between case-when and bucket+rollup at 1.7B rows). We encode that
 knowledge as a plan-construction heuristic — idiomatic for a
-DataFrame-building library; no Catalyst extension needed (SURVEY §7.4).
+DataFrame-building library; no Catalyst extension needed (SURVEY §7.4):
+``case_when`` for narrow specs, ``bucket_pivot`` for every wide one whose
+cells fit a BIGINT id.
 """
 
 from __future__ import annotations
@@ -14,19 +16,15 @@ from typing import Literal
 from pyspark.sql import DataFrame
 
 from feature_generation_benchmark_spark.plans.bucket_pivot import (
-    MAX_CELLS,
+    CELL_ID_LIMIT,
     compile_bucket_pivot,
-)
-from feature_generation_benchmark_spark.plans.bucket_rollup import (
-    compile_bucket_rollup,
+    n_union_cells,
 )
 from feature_generation_benchmark_spark.plans.case_when import compile_case_when
 from feature_generation_benchmark_spark.plans.grouped_map import compile_grouped_map
 from feature_generation_benchmark_spark.spec import FeatureSpec
 
-Strategy = Literal[
-    "auto", "case_when", "bucket_pivot", "bucket_rollup", "grouped_map"
-]
+Strategy = Literal["auto", "case_when", "bucket_pivot", "grouped_map"]
 
 #: Rough threshold: below this many feature cells the single-pass
 #: conditional agg is cheaper (no second shuffle, smaller plan); above it,
@@ -39,11 +37,11 @@ CASE_WHEN_MAX_FEATURES = 64
 #: switch to the single-exchange key-partitioned layout once the default
 #: layout's second exchange (|keys|×|cells| partial rows, on the key)
 #: exceeds this fraction of the input rows. Calibrated on same-session
-#: A/Bs (RESULTS.md): big_keys ratio 0.34 → keypart 2.31× faster; medium
-#: ratio 0.024 → default faster. The partial rows carry up to 4 aggregate
-#: slots per cell, so they are heavier than raw rows — a ratio ≳ 0.1
-#: means the default's two exchanges move ≈ 2× input volume where keypart
-#: moves it once.
+#: A/Bs: big_keys ratio 0.34 → keypart 2.31× faster; medium ratio 0.024 →
+#: default faster. The partial rows carry up to 4 aggregate slots per
+#: cell, so they are heavier than raw rows — a ratio ≳ 0.1 means the
+#: default's two exchanges move ≈ 2× input volume where keypart moves it
+#: once.
 KEYPART_MIN_PARTIAL_TO_INPUT = 0.1
 
 
@@ -58,10 +56,6 @@ def choose_bucket_pivot_layout(
     guess about scan parallelism (which varies with file layout). The
     hints are caller estimates — order-of-magnitude accuracy moves the
     ratio far less than the two regimes are apart (14×)."""
-    from feature_generation_benchmark_spark.plans.bucket_pivot import (
-        n_union_cells,
-    )
-
     if n_rows <= 0 or n_keys <= 0:
         return False
     return (
@@ -75,17 +69,14 @@ def choose_strategy(spec: FeatureSpec) -> Strategy:
     # and the bucketed strategies still collapse rows to one partial per
     # (key, cats) first (a previous windows>1 precondition here forced
     # wide single-window specs into the pathological plan for no reason).
-    if spec.n_features > CASE_WHEN_MAX_FEATURES:
-        from feature_generation_benchmark_spark.plans.bucket_pivot import (
-            n_union_cells,
-        )
-
-        # integer-cell pivot removes the per-partial-row CASE WHEN cost
-        # (measured ~2x at 1.7B rows) while its pivot buffer stays small;
-        # huge cell domains fall back to the conditional re-aggregation
-        if n_union_cells(spec) <= MAX_CELLS:
-            return "bucket_pivot"
-        return "bucket_rollup"
+    # The integer-cell pivot removes the per-row CASE WHEN cost (measured
+    # ~2x at 1.7B rows). A layout too large for a BIGINT cell id is a range
+    # limit, not a cost trade-off: the canonical plan serves it.
+    if (
+        spec.n_features > CASE_WHEN_MAX_FEATURES
+        and n_union_cells(spec) < CELL_ID_LIMIT
+    ):
+        return "bucket_pivot"
     return "case_when"
 
 
@@ -125,8 +116,6 @@ def compile_features(
                 ),
             )
         return compile_bucket_pivot(spec, df)
-    if strategy == "bucket_rollup":
-        return compile_bucket_rollup(spec, df)
     if strategy == "grouped_map":
         return compile_grouped_map(spec, df)
     raise ValueError(f"unknown strategy {strategy!r}")

@@ -1,6 +1,6 @@
 """Flagship feature-generation workload on the ``events`` table — the
 reference task family (SURVEY §2.3) instantiated on driver testdata, in all
-three physical strategies, sharing ONE spec and ONE generated oracle."""
+every physical strategy, sharing ONE spec and ONE generated oracle."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from feature_generation_benchmark_spark.plans import (
     compile_bucket_pivot,
-    compile_bucket_rollup,
     compile_case_when,
     compile_grouped_map,
 )
@@ -113,7 +112,7 @@ _DISCOVERED_ORACLE = oracle_sql_for_spec(
 
 
 def _discovered_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6 escape hatch (r5 verdict #8): multi-column pivot with INFERRED
+    """A6 escape hatch: multi-column pivot with INFERRED
     values, done honestly — :func:`discover_values` runs an explicit,
     bounded discovery scan whose domains feed a known-values spec, so the
     pivot plan itself stays static. DuckDB's ``PIVOT ... ON a, b``
@@ -157,18 +156,14 @@ def _case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_case_when(EVENTS_SPEC, _load(spark, sf_dir))
 
 
-def _bucket_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return compile_bucket_rollup(EVENTS_SPEC, _load(spark, sf_dir))
-
-
 def _bucket_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_bucket_pivot(EVENTS_SPEC, _load(spark, sf_dir))
 
 
 def _bucket_pivot_keypart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The single-exchange key-partitioned layout (the planner's pick in
-    the high-key-cardinality regime — 2.31× faster at big_keys, see
-    RESULTS.md r7 A/Bs) driver-gated against the SAME batch oracle as
+    the high-key-cardinality regime — 2.31× faster at big_keys in
+    same-session A/Bs) gated against the SAME batch oracle as
     every other strategy, so the at-scale layout itself is hash-checked
     end-to-end, not only equality-tested against the default layout."""
     return compile_bucket_pivot(
@@ -237,12 +232,6 @@ QUERIES = [
         _case_when,
         _ORACLE,
         "single-pass conditional aggregation (strategy A1)",
-    ),
-    QueryDef(
-        "feat_bucket_rollup",
-        _bucket_rollup,
-        _ORACLE,
-        "bucket + exact cumulative rollup (strategy A2+A3')",
     ),
     QueryDef(
         "feat_bucket_pivot",

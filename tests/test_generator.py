@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from feature_generation_benchmark_spark.plans import (
     compile_bucket_pivot,
-    compile_bucket_rollup,
     compile_case_when,
 )
 from feature_generation_benchmark_spark.sources.generator import (
@@ -120,7 +119,6 @@ def test_reference_task_2080_features_cross_strategy(spark, trx):
     cols = a.columns
     ra = {r["customer_id"]: r for r in a.collect()}
     for b in (
-        compile_bucket_rollup(spec, trx),
         compile_bucket_pivot(spec, trx),
         compile_bucket_pivot(spec, trx, key_partitioned=True),
     ):

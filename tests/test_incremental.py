@@ -118,6 +118,26 @@ def test_partials_cardinality_is_bounded(spark, dated):
     assert n <= dated.count()
 
 
+def test_asof_rejects_partials_missing_a_stat(spark, dated):
+    """Partials store only the stats their spec's aggs read. Serving a
+    spec that reads more (here: the sums a count-only store lacks) is a
+    named error, not an unresolved-column failure deep in the plan."""
+    from feature_generation_benchmark_spark.spec import Agg
+
+    count_only = FeatureSpec(
+        key="customer_id",
+        time_col="t_minus",
+        measure="trx_amnt",
+        windows=SPEC.windows,
+        groupings=SPEC.groupings,
+        aggs=(Agg.COUNT,),
+    )
+    partials = compile_day_partials(count_only, dated, "day")
+    assert "cnt" in partials.columns
+    with pytest.raises(ValueError, match="sum_trx_amnt"):
+        features_asof(SPEC, partials, REF_DAY, "day")
+
+
 def test_asof_excludes_future_days(spark, dated, tiny_transactions):
     """Historical as-of from a store whose frontier has advanced: days
     AFTER ref_day must not leak into any window (they would land in the

@@ -11,10 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from feature_generation_benchmark_spark.plans import (
-    compile_bucket_rollup,
-    compile_case_when,
-)
+from feature_generation_benchmark_spark.plans import compile_case_when
 from feature_generation_benchmark_spark.spec import FeatureSpec, Grouping
 
 
@@ -51,11 +48,6 @@ def _physical(df) -> str:
 def test_case_when_is_single_shuffle(spark, spec, trx_path):
     plan = _physical(compile_case_when(spec, spark.read.parquet(trx_path)))
     assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_bucket_rollup_is_two_shuffles(spark, spec, trx_path):
-    plan = _physical(compile_bucket_rollup(spec, spark.read.parquet(trx_path)))
-    assert plan.count("Exchange hashpartitioning") == 2, plan
 
 
 def test_window_cutoff_pushes_to_scan(spark, spec, trx_path):
@@ -172,7 +164,7 @@ def test_bucket_pivot_aggregates_only_the_stats_the_aggs_read(
 
 
 def test_bucket_pivot_key_partitioned_single_exchange(spark, spec, trx_path):
-    """r6 verdict #3 (big_keys shuffle volume): with key_partitioned=True
+    """big_keys shuffle volume: with key_partitioned=True
     the celled input exchanges ONCE on the key; HashPartitioning(key)
     satisfies the clustering of both the (key, cell) partial agg and the
     pivot, so neither adds an Exchange — and the results are identical
@@ -196,10 +188,7 @@ def test_bucket_pivot_key_partitioned_single_exchange(spark, spec, trx_path):
 def test_multi_measure_adds_no_shuffles(spark, trx_path):
     """A second measure must widen partial rows, not the plan: same two
     shuffles, one scan, and the window cutoff still pushed to the scan."""
-    from feature_generation_benchmark_spark.plans import (
-        compile_bucket_pivot,
-        compile_bucket_rollup,
-    )
+    from feature_generation_benchmark_spark.plans import compile_bucket_pivot
 
     spec2 = FeatureSpec(
         key="customer_id",
@@ -211,10 +200,9 @@ def test_multi_measure_adds_no_shuffles(spark, trx_path):
     src = spark.read.parquet(trx_path).withColumn(
         "t_minus_d", F.col("t_minus").cast("double")
     )
-    for compiler in (compile_bucket_pivot, compile_bucket_rollup):
-        plan = _physical(compiler(spec2, src))
-        assert plan.count("Exchange hashpartitioning") == 2, plan
-        assert plan.count("Scan parquet") == 1, plan
+    plan = _physical(compile_bucket_pivot(spec2, src))
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert plan.count("Scan parquet") == 1, plan
     cw = _physical(
         compile_case_when(
             FeatureSpec(
@@ -323,7 +311,7 @@ def test_dup_ngram_spans_no_cartesian(spark):
 
 
 def test_default_ngram_jaccard_entry_has_prefix_pruning(spark):
-    """r5 verdict #2: the default-named jaccard entry must serve the
+    """The default-named jaccard entry must serve the
     AllPairs prefix-filtered plan (scale-safe on Zipfian corpora). The
     prefix pass shows up as the frequency-ordered row_number window;
     the naive baseline entry must NOT pay for it."""
@@ -623,7 +611,7 @@ def test_bfs_levels_broadcast_node_state(spark):
     """The per-level frontier join into edges must broadcast the
     node-sized frontier — a SortMergeJoin means a fact-sized shuffle
     crept into the level loop. Exactly ONE join per level: the old
-    per-level visited anti-join is gone by design (r8 — the final
+    per-level visited anti-join is gone by design (the final
     min-hop fold subsumes it), so a second join node appearing here is a
     regression. (The loop consumes each level via localCheckpoint, so
     the guard inspects the exposed level builder.)"""
@@ -679,7 +667,7 @@ def test_gram_matrix_single_mapcombined_exchange(spark):
     """The Gram matrix's per-partition cell fold must stay pipelined in
     the scan stage: ONE hash exchange total, with a partial_sum
     HashAggregate below it — the exchange carries P×d(d+1)/2 cells, not
-    N×d² product rows. Since the r7 partition-GEMM rewrite the cell
+    N×d² product rows. Since the partition-GEMM rewrite the cell
     source is a ``mapInPandas`` numpy fold (one VᵀV per Arrow batch),
     not the JVM two-level explode — pin that too."""
     from feature_generation_benchmark_spark.workloads.similarity import (
@@ -745,7 +733,7 @@ def test_hybrid_rrf_fuses_after_source_topk(spark):
     # map-side by WindowGroupLimit) + one ≤N-row rank window per source
     assert plan.count("Window [") == 3, plan
     assert "WindowGroupLimit" in plan, plan
-    # fused scan budget (r4 verdict #8): the BM25 block keeps its own
+    # fused scan budget: the BM25 block keeps its own
     # 2-scan contract inside the fusion — documents read exactly twice
     # (tf/df pass + per-doc stats pass), embeddings once, nothing more
     assert plan.count("FileScan parquet") == 3, plan
@@ -797,7 +785,7 @@ def test_multimodal_codec_entries_never_shuffle_blobs(spark):
 
 
 # ---------------------------------------------------------------------------
-# r7 optimization-round plan guards
+# plan guards for measured optimizations
 # ---------------------------------------------------------------------------
 
 
@@ -806,7 +794,7 @@ def test_schema_profile_no_sort_aggregate_over_expand(spark):
     must stay SEPARATE aggregates: one mixed agg forces the
     multi-distinct rewrite into SortAggregate (string min/max buffers
     are not hash-mutable), i.e. a full Sort of the 6x-Expanded fact
-    table (r7: 8.3 s → 1.7 s at sf0.1)."""
+    table (8.3 s → 1.7 s at sf0.1)."""
     from feature_generation_benchmark_spark.workloads.quality import (
         schema_profile,
     )
@@ -822,7 +810,7 @@ def test_schema_profile_no_sort_aggregate_over_expand(spark):
 
 def test_graph_feature_propagation_caches_edges(spark):
     """The distinct trade-edge list feeds three aggregations; uncached it
-    was recomputed (scan+join+distinct) three times in one plan (r7: 26
+    was recomputed (scan+join+distinct) three times in one plan (26
     Exchanges → in-memory relation reused)."""
     from feature_generation_benchmark_spark.workloads.graph import (
         graph_feature_propagation,
@@ -842,8 +830,8 @@ def test_graph_feature_propagation_caches_edges(spark):
 
 def test_bigram_models_derive_context_from_bigram_counts(spark):
     """bigram_logprob / ccnet derive c1(w1) = Σ_w2 c2(w1,w2) from the
-    KB-sized bigram model instead of a second corpus-sized aggregation
-    (r7): exactly one groupBy over the exploded corpus frame."""
+    KB-sized bigram model instead of a second corpus-sized aggregation:
+    exactly one groupBy over the exploded corpus frame."""
     from feature_generation_benchmark_spark.workloads.text import (
         bigram_logprob,
     )
@@ -858,7 +846,7 @@ def test_bigram_models_derive_context_from_bigram_counts(spark):
 def test_jaccard_prefix_reads_sizes_off_verification_arrays(spark):
     """The prefix path's finalize reads n_shingles as size(__arr) off the
     arrays it already joins for verification — no separate sizes
-    aggregate + two joins (r7)."""
+    aggregate + two joins."""
     from feature_generation_benchmark_spark.operators.dedup import (
         ngram_jaccard_pairs,
     )

@@ -22,7 +22,6 @@ from tests._budget import examples
 
 from feature_generation_benchmark_spark.plans import (
     compile_bucket_pivot,
-    compile_bucket_rollup,
     compile_case_when,
     compile_grouped_map,
 )
@@ -93,7 +92,6 @@ def test_strategies_agree_on_random_specs(spark, case):
     canonical = compile_case_when(spec, df)
     ref = _collect(canonical, spec)
     for name, compiler in (
-        ("bucket_rollup", compile_bucket_rollup),
         ("bucket_pivot", compile_bucket_pivot),
         (
             "bucket_pivot_keypart",

@@ -11,7 +11,6 @@ import pytest
 
 from feature_generation_benchmark_spark.plans import (
     compile_bucket_pivot,
-    compile_bucket_rollup,
     compile_case_when,
     compile_grouped_map,
     compile_features,
@@ -71,16 +70,10 @@ def results(spark, tiny_transactions):
         "case_when_premask": compile_case_when(
             SMALL_SPEC, tiny_transactions, premask=True
         ),
-        "bucket_rollup": compile_bucket_rollup(SMALL_SPEC, tiny_transactions),
         "bucket_pivot": compile_bucket_pivot(SMALL_SPEC, tiny_transactions),
         "grouped_map": compile_grouped_map(SMALL_SPEC, tiny_transactions),
         "sql_text": compile_sql_text(SMALL_SPEC, tiny_transactions),
     }
-
-
-def test_case_when_vs_bucket_rollup(spark, results):
-    assert_frames_equal(results["case_when"], results["bucket_rollup"],
-                        "customer_id")
 
 
 def test_case_when_vs_bucket_pivot(spark, results):
@@ -158,13 +151,12 @@ def multi_transactions(tiny_transactions):
 
 def test_multi_measure_all_strategies_agree(spark, multi_transactions):
     """Every physical strategy must produce the identical two-measure
-    feature table (the round-2 multi-measure generalization)."""
+    feature table (the multi-measure generalization)."""
     canonical = compile_case_when(MULTI_SPEC, multi_transactions)
     others = {
         "premask": compile_case_when(
             MULTI_SPEC, multi_transactions, premask=True
         ),
-        "bucket_rollup": compile_bucket_rollup(MULTI_SPEC, multi_transactions),
         "bucket_pivot": compile_bucket_pivot(MULTI_SPEC, multi_transactions),
         "grouped_map": compile_grouped_map(MULTI_SPEC, multi_transactions),
         "sql_text": compile_sql_text(MULTI_SPEC, multi_transactions),
@@ -231,9 +223,6 @@ def test_composite_key_all_strategies_agree(spark, tiny_transactions):
     # 1 row per observed (customer, channel) pair with in-scope rows
     assert set(ra) == {(1, "mobile"), (1, "web"), (2, "web")}
     for name, compiled in {
-        "bucket_rollup": compile_bucket_rollup(
-            COMPOSITE_SPEC, tiny_transactions
-        ),
         "bucket_pivot": compile_bucket_pivot(
             COMPOSITE_SPEC, tiny_transactions
         ),
@@ -274,7 +263,6 @@ def test_out_of_domain_rows_count_for_unrelated_groupings(spark):
     )
     for compiler in (
         compile_case_when,
-        compile_bucket_rollup,
         compile_bucket_pivot,
         compile_grouped_map,
     ):
@@ -359,7 +347,8 @@ def test_planner_choice():
         (Grouping(cols=("c",), domains=(("a", "b"),)),),
     )
     assert choose_strategy(tiny) == "case_when"
-    # a huge cell domain must fall back to the conditional re-aggregation
+    # 990,000 union cells: the fan-out decodes fids from the cell id, so
+    # a large cell domain stays on the integer-cell pivot
     wide = FeatureSpec(
         "k", "t", "m", tuple(range(1, 100)),
         (
@@ -372,7 +361,84 @@ def test_planner_choice():
             ),
         ),
     )
-    assert choose_strategy(wide) == "bucket_rollup"
+    assert choose_strategy(wide) == "bucket_pivot"
+    # 81**10 ≥ 2**62 cells have no BIGINT cell id: the canonical plan
+    assert choose_strategy(_BEYOND_BIGINT) == "case_when"
+
+
+#: Ten 80-value groupings, each on its own column: every column gets an
+#: overflow slot, so the union layout has 81**10 ≈ 1.2e19 cells.
+_BEYOND_BIGINT = FeatureSpec(
+    "k", "t", "m", (7,),
+    tuple(
+        Grouping(
+            cols=(f"c{i}",), domains=(tuple(f"c{i}v{j}" for j in range(80)),)
+        )
+        for i in range(10)
+    ),
+)
+
+
+def test_bucket_pivot_rejects_cells_beyond_bigint(spark):
+    """A layout of 2**62 cells or more is refused by name at compile
+    time, before the input is touched: no DataFrame, so no Spark job."""
+    from feature_generation_benchmark_spark.plans.bucket_pivot import (
+        CELL_ID_LIMIT,
+        n_union_cells,
+    )
+
+    assert n_union_cells(_BEYOND_BIGINT) >= CELL_ID_LIMIT
+    with pytest.raises(ValueError, match="BIGINT cell id"):
+        compile_bucket_pivot(_BEYOND_BIGINT, None)
+
+
+def test_bucket_pivot_beyond_100k_cells_equals_case_when(spark):
+    """Two 250-value groupings on different columns plus the total:
+    251 × 251 × 2 = 126,002 union cells and 1,002 count features. The
+    planner picks bucket_pivot, and both layouts equal case_when — rows
+    out of one grouping's domain still count for the other and the total."""
+    from feature_generation_benchmark_spark.plans.bucket_pivot import (
+        n_union_cells,
+    )
+    from feature_generation_benchmark_spark.spec import Agg
+
+    spec = FeatureSpec(
+        key="k",
+        time_col="t",
+        measure="m",
+        windows=(7, 30),
+        groupings=(
+            Grouping(cols=(), domains=()),
+            Grouping(
+                cols=("ca",), domains=(tuple(f"a{i}" for i in range(250)),)
+            ),
+            Grouping(
+                cols=("cb",), domains=(tuple(f"b{i}" for i in range(250)),)
+            ),
+        ),
+        aggs=(Agg.COUNT,),
+    )
+    assert n_union_cells(spec) == 126_002
+    assert spec.n_features == 1_002
+    assert choose_strategy(spec) == "bucket_pivot"
+    rows = [
+        (
+            i % 7,
+            "zz" if i % 11 == 0 else f"a{(i * 37) % 250}",
+            "zz" if i % 13 == 0 else f"b{(i * 53) % 250}",
+            (i * 17) % 40,
+            float(i),
+        )
+        for i in range(400)
+    ]
+    df = spark.createDataFrame(
+        rows, "k long, ca string, cb string, t long, m double"
+    )
+    canonical = compile_case_when(spec, df)
+    assert_frames_equal(canonical, compile_features(spec, df), "k")
+    assert_frames_equal(
+        canonical, compile_bucket_pivot(spec, df, key_partitioned=True), "k"
+    )
 
 
 def test_compile_features_dispatch(spark, tiny_transactions):
@@ -408,7 +474,7 @@ def test_planner_layout_choice_from_hints(spark, tiny_transactions):
 
 
 # ---------------------------------------------------------------------------
-# r6 session-2 regression tests (plans review findings)
+# planner and compiler edge cases
 # ---------------------------------------------------------------------------
 
 SINGLE_WINDOW_WIDE = FeatureSpec(
@@ -460,7 +526,6 @@ def test_empty_cols_grouping_all_strategies(spark, tiny_transactions):
     TypeError on `None & mask` at executor runtime) and agree."""
     base = compile_case_when(TOTAL_SPEC, tiny_transactions)
     for compiled in (
-        compile_bucket_rollup(TOTAL_SPEC, tiny_transactions),
         compile_bucket_pivot(TOTAL_SPEC, tiny_transactions),
         compile_grouped_map(TOTAL_SPEC, tiny_transactions),
         compile_sql_text(TOTAL_SPEC, tiny_transactions),
@@ -504,7 +569,6 @@ def test_pivot_rollup_rejects_ambiguous_underscore_domains(spark,
             ),
         ),
     )
-    for compiler in (compile_bucket_pivot, compile_bucket_rollup,
-                     compile_features):
+    for compiler in (compile_bucket_pivot, compile_features):
         with pytest.raises(ValueError, match="collide"):
             compiler(spec, tiny_transactions)

@@ -10,6 +10,8 @@ Usage::
 
     python tools/bench_reference.py [tiny|small|medium|big] [strategy ...]
 
+Strategies default to ``bucket_pivot``.
+
 Baselines to compare against (16 vCPU, ``BASELINE.md``): PySpark pivot
 tiny 104.21 s / small 151.60 s / medium 455.49 s; PySpark case-when tiny
 242.84 s. Pass strategies explicitly; ``bucket_pivot`` is the planner's
@@ -17,7 +19,7 @@ at-scale default, ``case_when`` the canonical-semantics anchor.
 ``big_parts`` / ``big_keys`` isolate the big ladder's two stress axes on
 disk-constrained boxes (see ``sources/generator.py::SIZES``).
 
-NOISE-PROOF PROTOCOL (round 3 — this host's deliverable CPU swings up to
+NOISE-PROOF PROTOCOL (deliverable CPU on a shared host can swing up to
 ~7× between minutes, so single cold readings are not trustworthy):
 
 - the generated dataset persists under ``SPARK_GRAFT_DATA_CACHE``
@@ -26,6 +28,9 @@ NOISE-PROOF PROTOCOL (round 3 — this host's deliverable CPU swings up to
 - each strategy runs ``SPARK_GRAFT_REPS`` times (default 3) in ONE
   session; the per-rep times and their median are reported — the median
   of same-session reps is the load-bearing number;
+- the run's JSON is printed and also written to
+  ``<cache root>/ref_<size>_latest.json`` (path printed on stderr); the
+  committed ``results/`` anchors are never rewritten by a run;
 - an all-core integer burn probe runs before and after the reps and its
   wall time is recorded next to the anchor, so any reader can rescale a
   reading taken in a slow host window (healthy ≈ ``probe_ref_sec``).
@@ -49,7 +54,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from feature_generation_benchmark_spark.plans import (  # noqa: E402
     compile_bucket_pivot,
-    compile_bucket_rollup,
     compile_case_when,
 )
 from feature_generation_benchmark_spark.session import get_spark  # noqa: E402
@@ -66,7 +70,6 @@ STRATEGIES = {
     "bucket_pivot_keypart": lambda spec, df: compile_bucket_pivot(
         spec, df, key_partitioned=True
     ),
-    "bucket_rollup": compile_bucket_rollup,
     "case_when": compile_case_when,
 }
 
@@ -102,7 +105,7 @@ def _default_heap_gb() -> int:
 
 def main() -> None:
     size = sys.argv[1] if len(sys.argv) > 1 else "tiny"
-    strategies = sys.argv[2:] or ["bucket_rollup"]
+    strategies = sys.argv[2:] or ["bucket_pivot"]
     seed = int(os.environ.get("SPARK_GRAFT_SEED", "42"))
     reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
     cache_root = os.environ.get(
@@ -176,17 +179,14 @@ def main() -> None:
             shutil.rmtree(os.path.dirname(data_path), ignore_errors=True)
 
     print(json.dumps(result))
-    # persist beside the repo's other bench artifacts — stdout of long
-    # background runs gets filtered/truncated too easily to be the only
-    # copy of a 40-minute measurement
-    results_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "results",
-    )
-    os.makedirs(results_dir, exist_ok=True)
-    out_file = os.path.join(results_dir, f"ref_{size}_latest.json")
+    # persist beside the cached dataset — stdout of long background runs
+    # gets filtered/truncated too easily to be the only copy of a 40-minute
+    # measurement, and a run must not rewrite the committed results/
+    os.makedirs(cache_root, exist_ok=True)
+    out_file = os.path.join(cache_root, f"ref_{size}_latest.json")
     with open(out_file, "w") as f:
         json.dump(result, f, indent=1)
+    print(f"wrote {out_file}", file=sys.stderr)
 
 
 if __name__ == "__main__":
