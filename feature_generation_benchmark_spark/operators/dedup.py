@@ -103,7 +103,7 @@ def ngram_jaccard_pairs(
     are pair-symmetric, so pruning stays exact, and both-new pairs are
     normalized + deduplicated.
 
-    Frequency model (r6 verdict #2 — the 100× probe's only superlinear
+    Frequency model (the 100× probe's only superlinear
     leg was the corpus-wide vocabulary aggregate + corpus×vocab shuffle
     join that attached exact document frequencies): the prefix principle
     is exact under ANY deterministic global total order — frequency
@@ -253,7 +253,7 @@ def ngram_jaccard_pairs(
         # when small, hash-joins it when not.
         # NOT cached: the per-doc collect_list over the cached sh is a
         # cheap map-combined agg; storing a second corpus-sized frame
-        # costs more memory pressure than the recompute (100× probe, r7)
+        # costs more memory pressure than the recompute (100× probe)
         arrs = sh.groupBy(id_col).agg(
             F.array_sort(F.collect_list("shingle")).alias("__arr")
         )
@@ -279,9 +279,8 @@ def ngram_jaccard_pairs(
                 # the arrays ARE the per-doc distinct shingle sets, so
                 # their sizes ARE n_shingles — read them here instead of
                 # aggregating a separate `sizes` frame and joining it
-                # twice in the finalize (r7 optimization: −1 corpus agg,
-                # −2 pair-table joins; guide §2.4 "remove shuffles
-                # outright")
+                # twice in the finalize (−1 corpus agg, −2 pair-table
+                # joins)
                 F.size("__arr_a").alias("na"),
                 F.size("__arr_b").alias("nb"),
             )
@@ -307,8 +306,8 @@ def _jaccard_finalize(
 ) -> DataFrame:
     """(id_a, id_b, common) × per-doc shingle counts → thresholded
     ``(id_a, id_b, common, jaccard)`` — the output contract shared by the
-    exact and MinHash-LSH paths (r6 session-3 review: two verbatim copies
-    meant a contract fix could silently miss one). na/nb are DOC-dim
+    exact and MinHash-LSH paths (one copy, so a contract fix cannot miss
+    a path). na/nb are DOC-dim
     (corpus-sized): no broadcast hint — AQE decides from runtime stats."""
     na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("na"))
     nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("nb"))
@@ -339,8 +338,7 @@ def _banded_candidate_pairs(
 ) -> DataFrame:
     """Explode per-band bucket columns and self-join on (band, bucket)
     equality into distinct ``(id_a < id_b)`` candidate pairs — the LSH
-    banding core shared by the MinHash and SimHash paths (r6 session-3
-    review: two near-verbatim copies)."""
+    banding core shared by the MinHash and SimHash paths."""
     banded = frame.select(
         F.col(id_col),
         F.explode(
@@ -372,7 +370,6 @@ def decontamination_flags(
     id_col: str,
     text_col: str,
     n: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Training-data decontamination: flag corpus documents sharing any
     word ``n``-gram with an eval/benchmark document (the standard overlap
@@ -381,18 +378,15 @@ def decontamination_flags(
     Scale posture: the eval side collapses to a DISTINCT shingle set —
     benchmarks are dim-sized, so it broadcasts and the corpus side is one
     scan + broadcast hash join + one groupBy(id); the 100 TB corpus is
-    never shuffled on shingles. Set ``broadcast_eval=False`` for a huge
-    eval set (falls back to a shuffle equi-join on the shingle).
+    never shuffled on shingles.
 
     Output: one row per corpus doc — ``n_contaminated_shingles`` (distinct
     overlapping n-grams) and a boolean ``contaminated``.
     """
     c_sh = doc_shingles(corpus, id_col, text_col, n)
-    e_sh = doc_shingles(eval_docs, id_col, text_col, n).select(
-        "shingle"
-    ).distinct()
-    if broadcast_eval:
-        e_sh = F.broadcast(e_sh)
+    e_sh = F.broadcast(
+        doc_shingles(eval_docs, id_col, text_col, n).select("shingle").distinct()
+    )
     # doc_shingles is distinct per doc: count == countDistinct
     hits = c_sh.join(e_sh, "shingle").groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_contaminated_shingles")
@@ -506,7 +500,7 @@ def minhash_signatures(
     one-hash-function-per-band trick); the signature is a single group-by
     with ``num_perm`` min-aggregates — one shuffle, map-side combined.
 
-    (r7 A/B note: a universal-hash family ``(a_i·h + b_i) mod 2³¹−1``
+    (A/B note: a universal-hash family ``(a_i·h + b_i) mod 2³¹−1``
     over one shared base hash was tried to shrink the aggregate's
     per-row work; a 20M-row warm microbench read it NO faster — the
     min-buffer update, not the 8-byte xxhash64, dominates — so the
@@ -589,7 +583,7 @@ def minhash_dedup_pairs(
     keeps raw shingle strings (no xxhash64 pre-hash) so every stage is
     reproducible in DuckDB SQL.
 
-    ``internals`` (optional out-param, r8): receives the pipeline's
+    ``internals`` (optional out-param): receives the pipeline's
     CACHED doc-sized frames — ``"arrs"``, the per-doc sorted shingle
     array table (one row per doc with ≥ 1 ``n``-gram, i.e. ≥ ``n``
     tokens) — so gating wrappers can derive eligibility from the SAME
@@ -605,12 +599,12 @@ def minhash_dedup_pairs(
     # cache the corpus-sized 64-min aggregation executes TWICE per run
     # (seen in the captured plan: two HashAggregate[64 mins] pairs over
     # the same InMemoryTableScan). One row of 65 longs per doc — smaller
-    # than the sh cache that already anchors this pipeline (r7).
+    # than the sh cache that already anchors this pipeline.
     sig = minhash_signatures(sh, id_col, num_perm, hash_fn=hash_fn).cache()
     cand = lsh_candidate_pairs(sig, id_col, num_perm, bands, hash_fn=hash_fn)
 
     # verify against the FULL sets as per-doc shingle ARRAYS (the same
-    # r7 rewrite the prefix path carries): the exploded form shuffled the
+    # rewrite the prefix path carries): the exploded form shuffled the
     # whole shingle index twice (join on id_a, then on (id_b, shingle))
     # plus a separate per-doc sizes aggregate + two pair-table joins;
     # here ONE collect_list agg builds the doc-side array table, the
@@ -623,7 +617,7 @@ def minhash_dedup_pairs(
     # cache the DOC-sized array table too: the verify joins reference it
     # on both pair sides and each side otherwise re-runs the collect_list
     # aggregation over the cached sh (two ObjectHashAggregate pairs in
-    # the captured plan) (r7).
+    # the captured plan).
     arrs = sh.groupBy(id_col).agg(
         F.array_sort(F.collect_list("shingle")).alias("__arr")
     ).cache()
@@ -748,7 +742,7 @@ def simhash_dup_pairs(
     """Near-dup pairs with SimHash hamming distance ≤ ``max_hamming``
     (≤ 3 with 4×16-bit bands ⇒ candidate recall is exact by pigeonhole).
 
-    ``internals`` (optional out-param, r8): receives ``"bits"``, the
+    ``internals`` (optional out-param): receives ``"bits"``, the
     CACHED doc-sized band table (one row per doc with ≥ 1 token), so
     gating wrappers can derive eligibility from the same cached corpus
     pass instead of re-tokenizing."""

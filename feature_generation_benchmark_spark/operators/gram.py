@@ -6,25 +6,6 @@ One pass over quantized vectors emits upper-triangle product cells
 ``(i, -1, q_i)`` and the row count as ``(-1, -1, 1)``) into a single
 map-combined aggregate, so the only exchange carries ≤ P × (d(d+1)/2 +
 d + 1) partial cells regardless of corpus size.
-
-Two physical forms were A/B-measured for the per-row cell generation
-(r5 verdict #6 asked for a dimension guard on the flat explode whose
-per-row allocation grows d²/2):
-
-- **flat**: one ``flatten(transform(transform))`` array of all
-  d(d+1)/2 structs per row, one Generate. The r4/r5 production form.
-- **nested**: posexplode the vector first, then per (row, i) build only
-  the ≤ d structs of row i's triangle slice — TWO Generates, but every
-  intermediate array is O(d), never O(d²). At d = 4096 the flat form
-  materializes ~8.4M structs (~300 MB) per input row; the nested form
-  never holds more than one 4096-slice.
-
-Measured verdict (``tools/gram_crossover.py``, local[32], 100M cells per
-point, 2 runs): **nested wins at EVERY dimension** — 0.88-0.96× at
-d=32-256, 0.70× at d=512, 0.36-0.47× at d=1024 — so there is no
-crossover to guard and nested is simply the production form. The flat
-twin is kept for the A/B tool and the equality property test
-(``tests/test_gram.py``: both forms == numpy at d ∈ {5, 64, 130}).
 """
 
 from __future__ import annotations
@@ -43,12 +24,10 @@ def gram_suffstat_cells(
     moment pseudo-cells when ``with_moments``. Callers aggregate with
     ``groupBy("i", "j").agg(F.sum("p"))``.
 
-    Production form since r7: the partition-GEMM ``_gemm_cells`` — one
-    vectorized int64 ``Vᵀ·V`` per Arrow batch inside ``mapInPandas``
-    (guide §4.2), emitting the d(d+1)/2 cells once per PARTITION instead
-    of once per ROW. The JVM-exploded ``_nested_cells``/``_flat_cells``
-    forms stay for the A/B tool and the equality property tests
-    (``tests/test_gram.py`` pins gemm == nested == numpy).
+    Built by the partition-GEMM ``_gemm_cells`` — one vectorized int64
+    ``Vᵀ·V`` per Arrow batch inside ``mapInPandas``, emitting the
+    d(d+1)/2 cells once per PARTITION instead of once per ROW
+    (``tests/test_gram.py`` pins the cells against numpy).
     """
     return _gemm_cells(rows, qcol, with_moments)
 
@@ -62,8 +41,8 @@ def _gemm_cells(rows: DataFrame, qcol: str, with_moments: bool) -> DataFrame:
     1) cells — the same bound as before, but the pre-shuffle work drops
     from n·d²/2 codegen'd cell evaluations to n·d²/2 fused MACs plus a
     d²-sized emit per task. Ragged inputs accumulate per-length into the
-    top-left block, reproducing the per-row triangle cells of the
-    exploded forms exactly."""
+    top-left block, which equals the Gram of the zero-padded rows; empty
+    vectors are dropped, so the count cell counts non-empty rows only."""
     import numpy as np
     import pandas as pd
 
@@ -126,70 +105,3 @@ def _gemm_cells(rows: DataFrame, qcol: str, with_moments: bool) -> DataFrame:
         .mapInPandas(fold, "i int, j int, p long")
     )
 
-
-def _cell(i, j, p):
-    return F.struct(
-        i.cast("int").alias("i"), j.cast("int").alias("j"), p.alias("p")
-    )
-
-
-def _flat_cells(rows: DataFrame, qcol: str, with_moments: bool) -> DataFrame:
-    # Empty vectors contribute nothing — matching _nested_cells, whose
-    # posexplode drops them. Without the guard, sequence(0, -1) produces
-    # the DESCENDING [0, -1] and emits bogus cells colliding with the
-    # i=-1 moment pseudo-cell space (r6 session-3 review).
-    rows = rows.filter(F.size(qcol) > 0)
-    last = F.size(qcol) - F.lit(1)
-    gram = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), last),
-            lambda i: F.transform(
-                F.sequence(i, last),
-                lambda j: _cell(i, j, F.get(qcol, i) * F.get(qcol, j)),
-            ),
-        )
-    )
-    cells = gram
-    if with_moments:
-        sums = F.transform(
-            F.sequence(F.lit(0), last),
-            lambda i: _cell(i, F.lit(-1), F.get(qcol, i)),
-        )
-        count = F.array(_cell(F.lit(-1), F.lit(-1), F.lit(1).cast("long")))
-        cells = F.concat(gram, sums, count)
-    return rows.select(F.explode(cells).alias("c")).select(
-        "c.i", "c.j", "c.p"
-    )
-
-
-def _nested_cells(rows: DataFrame, qcol: str, with_moments: bool) -> DataFrame:
-    # Generate #1: one row per (vector, i) carrying q_i and the O(d)
-    # tail slice q[i:]; Generate #2 explodes that slice into row i's
-    # triangle cells. No O(d²) array ever exists in memory.
-    d = F.size(qcol)
-    leveled = rows.select(
-        F.posexplode(qcol).alias("__i", "__qi"),
-        # slice() is 1-based: elements i..d-1 (0-based) live at 1-based
-        # offset i+1, length d-i
-        F.slice(F.col(qcol), F.col("__i") + 1, d - F.col("__i")).alias(
-            "__tail"
-        ),
-    )
-    i = F.col("__i")
-    gram_i = F.transform(
-        "__tail",
-        lambda x, k: _cell(i, i + k, F.col("__qi") * x),
-    )
-    cells = gram_i
-    if with_moments:
-        moment_i = F.when(
-            i == 0,
-            F.array(
-                _cell(i, F.lit(-1), F.col("__qi")),
-                _cell(F.lit(-1), F.lit(-1), F.lit(1).cast("long")),
-            ),
-        ).otherwise(F.array(_cell(i, F.lit(-1), F.col("__qi"))))
-        cells = F.concat(gram_i, moment_i)
-    return leveled.select(F.explode(cells).alias("c")).select(
-        "c.i", "c.j", "c.p"
-    )

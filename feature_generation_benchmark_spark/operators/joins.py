@@ -148,7 +148,6 @@ def interval_join(
     start: str,
     end: str,
     bucket_width: int,
-    broadcast_intervals: bool = False,
 ) -> DataFrame:
     """Point-in-interval join with NO equi-key: attach every interval row
     (half-open ``[start, end)``, numeric axis — e.g. int64 µs) to each point
@@ -170,8 +169,8 @@ def interval_join(
     every bucket it overlaps); the width only trades interval replication
     factor against candidate selectivity — set it near the typical interval
     length (callers derive it from the workload's static window length,
-    keeping the plan free of a discovery scan). Pass
-    ``broadcast_intervals=True`` when the interval side is dim-sized.
+    keeping the plan free of a discovery scan). A dim-sized interval side
+    broadcasts through ``autoBroadcastJoinThreshold`` without a hint.
     """
     if bucket_width <= 0:
         raise ValueError("bucket_width must be positive")
@@ -187,8 +186,6 @@ def interval_join(
             )
         ),
     )
-    if broadcast_intervals:
-        ivl = F.broadcast(ivl)
     return (
         pts.join(ivl, on="__bucket", how="inner")
         .filter(

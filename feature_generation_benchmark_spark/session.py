@@ -11,65 +11,10 @@ scale-up without per-query retuning.
 
 from __future__ import annotations
 
-import glob
 import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
-
-
-def comet_jar() -> str | None:
-    """Locate an Apache DataFusion Comet jar if one is present
-    (``SPARK_GRAFT_COMET_JAR`` or a ``comet-spark-*.jar`` on disk).
-
-    An EXPLICITLY configured path that doesn't exist raises — silently
-    falling back would run the 'comet'-labeled profile on vanilla Spark
-    and quietly invalidate an A/B measurement. The no-env discovery path
-    stays best-effort (absence is a valid state), and picks the highest
-    VERSION, not the lexicographically largest name (0.10 > 0.9)."""
-    env = os.environ.get("SPARK_GRAFT_COMET_JAR")
-    if env:
-        if not os.path.exists(env):
-            raise FileNotFoundError(
-                f"SPARK_GRAFT_COMET_JAR={env} does not exist — refusing "
-                "to silently run the comet profile without Comet"
-            )
-        return env
-    import re
-
-    for root in ("/opt", os.path.expanduser("~")):
-        hits = glob.glob(
-            os.path.join(root, "**", "comet-spark-*.jar"), recursive=True
-        )
-        if hits:
-            def version_key(path: str) -> tuple:
-                nums = re.findall(r"\d+", os.path.basename(path))
-                return tuple(int(n) for n in nums), path
-
-            return max(hits, key=version_key)
-    return None
-
-
-#: Conf profile mirroring the reference's Comet launcher
-#: (``run_comet.sh:4-22``): session extension + native shuffle manager +
-#: full native exec with row→columnar conversion at the scan boundary.
-#: Applied only when a Comet jar is actually present — ``get_spark(
-#: profile="comet")`` is a clean no-op otherwise, so callers can request
-#: the accelerated profile unconditionally.
-COMET_CONF: dict[str, str] = {
-    "spark.sql.extensions": "org.apache.comet.CometSparkSessionExtensions",
-    "spark.shuffle.manager": (
-        "org.apache.spark.sql.comet.execution.shuffle.CometShuffleManager"
-    ),
-    "spark.comet.enabled": "true",
-    "spark.comet.exec.enabled": "true",
-    "spark.comet.exec.all.enabled": "true",
-    "spark.comet.explainFallback.enabled": "true",
-    "spark.comet.exec.shuffle.enabled": "true",
-    "spark.comet.exec.shuffle.mode": "native",
-    "spark.comet.memory.overhead.factor": "0.3",
-    "spark.comet.rowToColumnar.enabled": "true",
-}
 
 
 #: Runtime-settable subset of the engine profile, for sessions the engine
@@ -101,8 +46,8 @@ def default_parallelism() -> int:
 
 @contextmanager
 def cache_scope(spark: SparkSession):
-    """Release storage pinned INSIDE the scope when it exits (r8, r7
-    verdict #8 — cache hygiene for library consumers).
+    """Release storage pinned INSIDE the scope when it exits (cache
+    hygiene for library consumers).
 
     Several query functions ``.cache()``/``localCheckpoint`` intra-query
     frames that are referenced multiple times within one returned plan;
@@ -140,7 +85,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    profile: str | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's conf profile.
 
@@ -154,10 +98,6 @@ def get_spark(
     - Arrow on: every pandas/Arrow UDF boundary is vectorized.
     - Kryo: cheap win for shuffle-heavy wide-row plans (the reference uses
       it in all Spark impls).
-    - ``profile="comet"``: apply the reference's native-accelerator confs
-      (``run_comet.sh``) when a Comet jar is found; silent no-op without
-      one. The reference's best medium number (412 s) is its Comet pivot —
-      this profile is the parity knob for plugging the same accelerator.
     """
     # Protobuf fallback must be on PYTHONPATH before the JVM launches so
     # executor-side Python workers (which inherit the JVM's environment)
@@ -170,9 +110,7 @@ def get_spark(
     if master is None:
         master = os.environ.get("SPARK_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cores))
-        )
+        shuffle_partitions = cores
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -185,18 +123,13 @@ def get_spark(
         # bucket_pivot at 1.2B rows: 808 s at 32 partitions vs 634 s at
         # 256 — per-task spill was the bottleneck), while AQE merges the
         # excess away for small stages at no measurable cost.
-        # (factor overridable via SPARK_GRAFT_INIT_PARTITION_FACTOR for
-        # A/B probes; 8 is the measured volume-sized default)
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(
-                cores
-                * int(os.environ.get("SPARK_GRAFT_INIT_PARTITION_FACTOR", "8"))
-            ),
+            str(cores * 8),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE coalescing floor (r7 plan audit): with parallelismFirst
-        # (default) AQE sizes post-shuffle partitions at
+        # AQE coalescing floor: with parallelismFirst (default) AQE sizes
+        # post-shuffle partitions at
         # max(bytes/parallelism, minPartitionSize); the 1 MB default
         # floor collapses byte-SMALL but CPU-DENSE stages (pair
         # verification over hash arrays, codec work, window sorts of
@@ -206,10 +139,9 @@ def get_spark(
         # 256k 31.1 s — dedup_jaccard_incremental alone 12.5 → 5.5 s.
         # 256k only lowers the floor: stages whose bytes/parallelism
         # exceed it (any real at-scale shuffle) coalesce exactly as
-        # before, so the knob is scale-neutral, and overridable for A/Bs.
+        # before, so the floor is scale-neutral.
         .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"),
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k"
         )
         # Let AQE right-size CACHED plans too: by default Spark pins a
         # cache's output partitioning (uncoalesced, e.g. 256-1024 tiny
@@ -242,26 +174,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         # Console progress bars write \r-separated spam that has truncated
-        # a driver-captured BENCH artifact (r2: `parsed: null`); the engine
+        # a captured BENCH artifact (its JSON line parsed as null); the engine
         # never wants them.
         .config("spark.ui.showConsoleProgress", "false")
     )
-    if profile == "comet":
-        jar = comet_jar()
-        if jar is not None:
-            builder = builder.config("spark.jars", jar)
-            builder = builder.config("spark.driver.extraClassPath", jar)
-            builder = builder.config("spark.executor.extraClassPath", jar)
-            for k, v in COMET_CONF.items():
-                builder = builder.config(k, v)
-    elif profile is not None:
-        raise ValueError(f"unknown session profile {profile!r}")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    # ad-hoc conf A/Bs without code edits (JSON object), e.g.
-    # SPARK_GRAFT_EXTRA_CONF='{"spark.io.compression.codec":"zstd"}' —
-    # used by the big-ladder runs to trade CPU for ~2x smaller shuffle
-    # spill on disk-constrained boxes
+    # ad-hoc conf A/Bs without code edits: a JSON object whose confs
+    # override any set above, e.g. SPARK_GRAFT_EXTRA_CONF=
+    # '{"spark.sql.adaptive.coalescePartitions.minPartitionSize":"1m"}'
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
     if env_conf:
         import json as _json

@@ -1,5 +1,5 @@
 """Flagship feature-generation workload on the ``events`` table — the
-reference task family (SURVEY §2.3) instantiated on driver testdata, in all
+reference task family (SURVEY §2.3) instantiated on driver testdata, in
 every physical strategy, sharing ONE spec and ONE generated oracle."""
 
 from __future__ import annotations
@@ -175,10 +175,6 @@ def _grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_grouped_map(EVENTS_SPEC, _load(spark, sf_dir))
 
 
-def _case_when_premask(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return compile_case_when(EVENTS_SPEC, _load(spark, sf_dir), premask=True)
-
-
 def _sql_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compile_sql_text(EVENTS_SPEC, _load(spark, sf_dir))
 
@@ -254,12 +250,6 @@ QUERIES = [
         "grouped-map applyInPandas fallback (strategy A4)",
         bench=False,  # escape hatch, not a perf path (10-13x slower in the
         # reference too) — verified by the correctness gate instead
-    ),
-    QueryDef(
-        "feat_case_when_premask",
-        _case_when_premask,
-        _ORACLE,
-        "pre-masked projection + plain aggs (strategy A10 rewrite of A1)",
     ),
     QueryDef(
         "feat_sql_text",

@@ -125,9 +125,9 @@ def test_simhash_near_dups(spark, docs):
     assert not any({a, b} == {1, 4} for a, b in got)
 
 
-def test_decontamination_broadcast_and_shuffle_paths_agree(spark):
-    """broadcast_eval=False (huge-eval fallback, shuffle equi-join) must
-    match the broadcast path row for row."""
+def test_decontamination_flags_per_document(spark):
+    """One row per corpus doc: an overlapping 4-gram flags it, no overlap
+    or too few tokens to shingle leaves it clean."""
     from feature_generation_benchmark_spark.operators.dedup import (
         decontamination_flags,
     )
@@ -143,20 +143,15 @@ def test_decontamination_broadcast_and_shuffle_paths_agree(spark):
     eval_docs = spark.createDataFrame(
         [(100, "quick brown fox jumps")], ["doc_id", "text"]
     )
-
-    def rows(broadcast):
-        return sorted(
-            map(
-                tuple,
-                decontamination_flags(
-                    corpus, eval_docs, "doc_id", "text", n=4,
-                    broadcast_eval=broadcast,
-                ).collect(),
-            )
+    got = sorted(
+        map(
+            tuple,
+            decontamination_flags(
+                corpus, eval_docs, "doc_id", "text", n=4
+            ).collect(),
         )
-
-    got = rows(True)
-    assert got == rows(False)
+    )
+    assert [r[0] for r in got] == [1, 2, 3]
     by_id = {r[0]: r for r in got}
     assert by_id[1][2] is True and by_id[1][1] >= 1   # overlapping 4-gram
     assert by_id[2] == (2, 0, False)                  # no overlap

@@ -2,41 +2,24 @@
 
 from __future__ import annotations
 
-import pytest
-
-from feature_generation_benchmark_spark.session import comet_jar, get_spark
+from feature_generation_benchmark_spark.session import default_parallelism
 
 
-def test_comet_profile_noops_without_jar(spark, monkeypatch):
-    """profile='comet' must be a clean no-op when no Comet jar exists —
-    callers request the accelerated profile unconditionally and get the
-    plain engine profile on vanilla machines."""
-    import feature_generation_benchmark_spark.session as sess
-
-    monkeypatch.setattr(sess, "comet_jar", lambda: None)
-    s = sess.get_spark("comet-noop-test", profile="comet")
-    # getOrCreate reuses the test session; no comet confs were applied
-    assert s.conf.get("spark.comet.enabled", "false") == "false"
-
-
-def test_unknown_profile_rejected():
-    with pytest.raises(ValueError, match="unknown session profile"):
-        get_spark("bad-profile-test", profile="nope")
-
-
-def test_comet_jar_env_missing_path(monkeypatch):
-    """An explicitly configured jar path that doesn't exist must raise —
-    silently running the 'comet' profile on vanilla Spark would
-    invalidate an A/B measurement without a trace (r6 session-2 review)."""
-    import pytest
-
-    monkeypatch.setenv("SPARK_GRAFT_COMET_JAR", "/nonexistent/comet.jar")
-    with pytest.raises(FileNotFoundError, match="SPARK_GRAFT_COMET_JAR"):
-        comet_jar()
+def test_engine_session_partition_profile(spark):
+    """The engine session starts shuffles at 8 partitions per core and
+    lets AQE coalesce no finer than 256k (the measured defaults that
+    ``get_spark`` hard-codes; ``SPARK_GRAFT_EXTRA_CONF`` is the only
+    override)."""
+    conf = spark.sparkContext.getConf()
+    prefix = "spark.sql.adaptive.coalescePartitions."
+    assert conf.get(prefix + "initialPartitionNum") == str(
+        8 * default_parallelism()
+    )
+    assert conf.get(prefix + "minPartitionSize") == "256k"
 
 
 def test_cache_scope_releases_query_pins(spark):
-    """r7 verdict #8 (cache hygiene): three cache()-using queries run
+    """Cache hygiene: three cache()-using queries run
     back-to-back through the public registry, each consumed inside a
     cache_scope — pinned storage must return to zero afterwards, and a
     cache pinned BEFORE the scopes must survive them untouched."""

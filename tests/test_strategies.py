@@ -67,9 +67,6 @@ def assert_frames_equal(a, b, key):
 def results(spark, tiny_transactions):
     return {
         "case_when": compile_case_when(SMALL_SPEC, tiny_transactions),
-        "case_when_premask": compile_case_when(
-            SMALL_SPEC, tiny_transactions, premask=True
-        ),
         "bucket_pivot": compile_bucket_pivot(SMALL_SPEC, tiny_transactions),
         "grouped_map": compile_grouped_map(SMALL_SPEC, tiny_transactions),
         "sql_text": compile_sql_text(SMALL_SPEC, tiny_transactions),
@@ -85,11 +82,6 @@ def test_case_when_vs_bucket_pivot(spark, results):
 
 def test_case_when_vs_grouped_map(spark, results):
     assert_frames_equal(results["case_when"], results["grouped_map"],
-                        "customer_id")
-
-
-def test_case_when_vs_premask(spark, results):
-    assert_frames_equal(results["case_when"], results["case_when_premask"],
                         "customer_id")
 
 
@@ -154,9 +146,6 @@ def test_multi_measure_all_strategies_agree(spark, multi_transactions):
     feature table (the multi-measure generalization)."""
     canonical = compile_case_when(MULTI_SPEC, multi_transactions)
     others = {
-        "premask": compile_case_when(
-            MULTI_SPEC, multi_transactions, premask=True
-        ),
         "bucket_pivot": compile_bucket_pivot(MULTI_SPEC, multi_transactions),
         "grouped_map": compile_grouped_map(MULTI_SPEC, multi_transactions),
         "sql_text": compile_sql_text(MULTI_SPEC, multi_transactions),

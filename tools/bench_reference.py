@@ -25,9 +25,14 @@ NOISE-PROOF PROTOCOL (deliverable CPU on a shared host can swing up to
 - the generated dataset persists under ``SPARK_GRAFT_DATA_CACHE``
   (default ``/tmp/fgb_ref_cache``) keyed by (size, seed) and is reused
   across runs — generation noise never contaminates the query anchor;
-- each strategy runs ``SPARK_GRAFT_REPS`` times (default 3) in ONE
-  session; the per-rep times and their median are reported — the median
-  of same-session reps is the load-bearing number;
+- each strategy runs one untimed warm rep, then ``SPARK_GRAFT_REPS``
+  timed reps (default 3), in ONE session; the per-rep times and their
+  median are reported — the median of same-session warm reps is the
+  load-bearing number. Without the warm rep the first timed rep carried
+  the session's warm-up and was the slowest of its run by 3.0–18.5 s
+  (``tiny``, 4 cores), so with ``SPARK_GRAFT_REPS=2`` the median was the
+  mean of a cold and a warm rep. The warm rep adds one cold rep's wall
+  time per strategy (17–35 s at ``tiny`` on 4 cores);
 - the run's JSON is printed and also written to
   ``<cache root>/ref_<size>_latest.json`` (path printed on stderr); the
   committed ``results/`` anchors are never rewritten by a run;
@@ -37,8 +42,8 @@ NOISE-PROOF PROTOCOL (deliverable CPU on a shared host can swing up to
 
 Env: ``SPARK_GRAFT_REPS``, ``SPARK_GRAFT_DATA_CACHE``,
 ``SPARK_GRAFT_KEEP_CACHE=0`` to delete after the run,
-``SPARK_GRAFT_INIT_PARTITION_FACTOR`` (session.py) for the
-initialPartitionNum A/B.
+``SPARK_GRAFT_EXTRA_CONF`` (session.py; a JSON object of Spark confs)
+for conf A/Bs such as ``initialPartitionNum``.
 """
 
 from __future__ import annotations
@@ -153,15 +158,21 @@ def main() -> None:
         "probe_before_sec": probe_before,
         "strategies": {},
     }
+
+    def run(name: str, tag: str) -> float:
+        t0 = time.time()
+        df = STRATEGIES[name](spec, spark.read.parquet(data_path))
+        df.write.mode("overwrite").parquet(
+            os.path.join(out_root, f"out_{name}_{tag}")
+        )
+        return round(time.time() - t0, 2)
+
     try:
         for name in strategies:
+            run(name, "warm")  # untimed
             times, rep_probes = [], []
             for rep in range(reps):
-                out_path = os.path.join(out_root, f"out_{name}_{rep}")
-                t0 = time.time()
-                df = STRATEGIES[name](spec, spark.read.parquet(data_path))
-                df.write.mode("overwrite").parquet(out_path)
-                times.append(round(time.time() - t0, 2))
+                times.append(run(name, str(rep)))
                 # short per-rep probe: each reading carries its own host-
                 # capacity calibration (the host can swing 4x mid-run)
                 rep_probes.append(burn_probe(loops=3 * 10**7))

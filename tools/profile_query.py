@@ -1,9 +1,11 @@
-"""Isolate and time single queries with the noop sink (guide §1.4).
+"""Isolate and time single queries with the noop sink.
 
 Times the COMPUTATION (noop sink evaluates every column of every row,
 no output write) with a warm session, N repetitions, caches cleared
 between runs — the per-query microscope the suite bench (which times
-the reference protocol: compute + parquet write) cannot be.
+the reference protocol: compute + parquet write) cannot be. One untimed
+pass over every named query runs first, so no query's reps carry the
+session's warm-up (~2.5 s, which otherwise lands on the first query).
 
 Usage:
     python tools/profile_query.py query [query ...]        # 3 reps each
@@ -43,15 +45,23 @@ def main() -> None:
 
     spark.range(64).select(_warm(F.col("id").cast("double"))).count()
 
+    def run(name: str) -> float:
+        spark.sparkContext.setJobDescription(f"profile: {name}")
+        t0 = time.time()
+        reg[name].fn(spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        elapsed = time.time() - t0
+        spark.catalog.clearCache()
+        return elapsed
+
+    # one untimed pass (codegen, Python workers, parquet footers) over
+    # every named query, as tools/bench_ab.py does
     for name in names:
-        fn = reg[name].fn
-        times = []
-        for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"profile: {name}")
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
+        run(name)
+
+    for name in names:
+        times = [round(run(name), 3) for _ in range(reps)]
         print(f"{name}: {times} min={min(times)}")
 
 
