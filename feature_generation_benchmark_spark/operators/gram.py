@@ -58,8 +58,6 @@ def _gemm_cells(rows: DataFrame, qcol: str, with_moments: bool) -> DataFrame:
                 (len(a) for a in arrs), dtype=np.int64, count=len(arrs)
             )
             for ln in np.unique(lens):
-                if ln == 0:
-                    continue
                 V = np.stack(arrs[lens == ln]).astype(np.int64)
                 if ln > G.shape[0]:
                     G2 = np.zeros((ln, ln), dtype=np.int64)
@@ -100,6 +98,7 @@ def _gemm_cells(rows: DataFrame, qcol: str, with_moments: bool) -> DataFrame:
         yield out
 
     return (
+        # drops empty and NULL (size −1) vectors before the Arrow boundary
         rows.filter(F.size(qcol) > 0)
         .select(qcol)  # only the vector crosses the Arrow boundary
         .mapInPandas(fold, "i int, j int, p long")

@@ -1,5 +1,5 @@
 """Physical strategy A2+A3″ — single-pass integer-cell partial aggregation
-+ long-form roll-up + known-values pivot. The engine's one bucketed plan:
++ long-form roll-up + one Arrow scatter. The engine's one bucketed plan:
 the planner picks it for every wide spec, and incremental serving
 (``plans/incremental.py``) runs its roll-up over day partials.
 Semantics identical to every other strategy.
@@ -18,40 +18,55 @@ which dominates the run. This plan removes that cost entirely:
    is ``(long, long, ≤ 4 numerics)`` — roughly half the bytes of
    shuffling category strings (reference pivot key synthesis,
    ``impl/pyspark-pivot.py:104-105,124``, shuffles concat'd strings).
-3. The roll-up happens in LONG form, before the pivot: each partial row
+3. The roll-up happens in LONG form, before the layout: each partial row
    fans out to the integer **feature-cell ids** (fids) it feeds — one
    per (grouping combo, window ≥ the cell's bucket), 2 × up to 8 for the
    reference task. The fids are decoded from the cell id by integer
    arithmetic (each column's digit, then one ``sequence`` per grouping),
    so no join, no per-row CASE WHEN, and nothing whose size grows with
    the number of cells.
-4. The pivot on the fid, with an EXPLICIT integer value list (reference
-   known-values idiom, ``impl/pyspark-pivot.py:106-110,126``), merges the
-   partials per ``(key, fid)`` (sum, sum, min, max) in its own first
-   phase and then lays them out wide with ``PivotFirst`` — an O(1)
-   buffer write per row, not a per-feature CASE WHEN. Each feature then
-   reads its own fid's slots (avg reads two: exact ``avg = Σsum/Σcount``,
-   the §2.7.2-3 fixes), once per OUTPUT row.
+4. The partials merge per ``(key, fid)`` (sum, sum, min, max) in LONG
+   form, and each ``(key, fid)`` row evaluates one value column per
+   (agg, measure) slot — 5 expressions for the reference task, with the
+   exact ``avg = Σsum/Σcount`` and the canonical empty-group encoding
+   (the §2.7.2-3 fixes).
+5. One ``mapInArrow`` lays the slots out wide: per partition it gives
+   each distinct key (composite, any type, NULL included) a dense id,
+   scatters every row's index into a fid × key grid and gathers each
+   slot's values through it, so feature ``i`` is slot ``i % per`` of fid
+   ``i // per``. A fid the key never reached reads count 0, sum 0.0 and
+   NULL avg/min/max; a NULL fid (the dead cell) only makes its key appear.
 
-   Rolling up in a projection above the pivot instead — each feature
-   re-adding its window's buckets from a cell pivot — is what this
-   replaced: 205,803 optimized-plan nodes for the reference task, 53,861
-   with a shared per-cell cumulative layer, 25,433 in long form.
+   Laying out with Spark instead is what this replaced: a known-values
+   ``pivot`` on the fid (``PivotFirst``) plus a 2,080-expression
+   projection over its slots gave 25,434 optimized-plan nodes for the
+   reference task (2,582 now), and its final stage spent most of its
+   time generating code for the wide projections. Rolling up in a
+   projection above a cell pivot gave 53,861 with a shared per-cell
+   cumulative layer and 205,803 without one.
 
 Scale posture: one input scan, one big shuffle (reduced by map-side
 partial aggregation to ≤ |keys| × n_cells rows), one tiny shuffle of
-partials on the key, no join; the fan-out and the pivot run inside the
-last stage. Cell-domain size is compile-time-known (no discovery
-scan); plans stay static. Expressions are built as SQL strings — one JVM
-parse per feature instead of a dozen Py4J round-trips each.
+partials on the key, no join; the fan-out, the ``(key, fid)`` merge and
+the scatter run inside the last stage, since ``HashPartitioning(key)``
+keeps every key's rows in one partition. Python holds one partition's
+long form — at most keys-in-partition × n_fids rows — plus its fid × key
+index grid, and emits the wide rows in batches of at most
+``_BATCH_CELLS`` columns × keys. Cell-domain size is compile-time-known
+(no discovery scan); plans stay static, and their size no longer grows
+with the number of features.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from feature_generation_benchmark_spark.functions.exprs import (
     quote_ident,
@@ -76,8 +91,8 @@ def _union_domains(
     grouping that does not involve c (canonical semantics — the case-when
     predicates never look at c). Such rows must keep a distinct cell
     coordinate, so any column absent from at least one grouping gets one
-    extra index slot for "out of domain". Two exemptions keep the pivot at
-    minimal width: columns present in EVERY grouping (out-of-domain there
+    extra index slot for "out of domain". Two exemptions keep the cell
+    count minimal: columns present in EVERY grouping (out-of-domain there
     disqualifies the row everywhere — the NULL cell id drops it before
     aggregation), and columns whose grouping declares ``closed=True``
     (the spec asserts out-of-domain values cannot occur).
@@ -215,31 +230,108 @@ def _fanout_sql(
     )
 
 
-def _feature_sql(spec: FeatureSpec, feat, fid: int, one_stat: bool) -> str:
-    """One feature from its own fid's pivot slots, with the canonical
-    empty-group encoding: count 0, sum 0.0, NULL avg/min/max, and the
-    exact ``avg = Σsum/Σcount``. Spark names a single-aggregate pivot's
-    columns by the value alone (``one_stat``)."""
+#: The empty-group value of each agg that has one (a fid a key never
+#: reached): count 0 and sum 0.0; avg, min and max stay NULL.
+_EMPTY = {Agg.COUNT: 0, Agg.SUM: 0.0}
 
-    def slot(suffix: str) -> str:
-        return quote_ident(str(fid) if one_stat else f"{fid}_{suffix}")
+#: Upper bound on the columns × keys cells of one output Arrow batch
+#: (~32 MB of doubles), so a partition with many keys streams out in
+#: several batches instead of one partition-sized one.
+_BATCH_CELLS = 1 << 22
 
-    cnt = f"coalesce({slot('cnt')}, 0)"
-    if feat.agg is Agg.COUNT:
-        return f"{cnt} AS {quote_ident(feat.name)}"
-    m = feat.measure
-    total = f"coalesce({slot(f'sum_{m}')}, CAST(0 AS DOUBLE))"
-    if feat.agg is Agg.SUM:
+
+def _slot_sql(spec: FeatureSpec, agg: Agg, m: str) -> str:
+    """The value of feature slot ``(agg, m)`` from one ``(key, fid)``
+    row's merged stats, with the canonical null-safe forms: count and sum
+    are never NULL, and ``avg = Σsum/Σcount`` is NULL on an empty cell."""
+    cnt = "coalesce(cnt, 0)"
+    if agg is Agg.COUNT:
+        return cnt
+    total = f"coalesce({quote_ident(f'sum_{m}')}, CAST(0 AS DOUBLE))"
+    if agg is Agg.SUM:
         expr = total
-    elif feat.agg is Agg.AVG:
+    elif agg is Agg.AVG:
         expr = f"CASE WHEN {cnt} > 0 THEN {total} / {cnt} END"
-    elif feat.agg in (Agg.MIN, Agg.MAX):
-        expr = slot(f"{feat.agg.value}_{m}")
+    elif agg in (Agg.MIN, Agg.MAX):
+        expr = quote_ident(f"{agg.value}_{m}")
     else:  # pragma: no cover
-        raise ValueError(f"unknown agg {feat.agg}")
+        raise ValueError(f"unknown agg {agg}")
     if spec.round_decimals is not None:
         expr = f"round({expr}, {spec.round_decimals})"
-    return f"{expr} AS {quote_ident(feat.name)}"
+    return expr
+
+
+def _hashable(v):
+    """A nested key value (struct → dict, array → list) as a tuple."""
+    if isinstance(v, dict):
+        return tuple((k, _hashable(x)) for k, x in v.items())
+    if isinstance(v, list):
+        return tuple(_hashable(x) for x in v)
+    return v
+
+
+def _codes(col: pa.Array) -> np.ndarray:
+    """One integer code per distinct value of ``col``, NULL included."""
+    if pa.types.is_nested(col.type):  # no Arrow hash kernel for these
+        seen: dict = {}
+        vals = map(_hashable, col.to_pylist())
+        return np.array([seen.setdefault(v, len(seen)) for v in vals])
+    return pc.dictionary_encode(col, null_encoding="encode").indices.to_numpy()
+
+
+def _key_ids(cols: list[pa.Array]) -> tuple[np.ndarray, list[pa.Array]]:
+    """Dense id of each row's key tuple and the distinct key tuples in id
+    order. Composite keys, any Arrow type and NULLs all make keys."""
+    codes = [_codes(c) for c in cols]
+    tuples = codes[0] if len(codes) == 1 else np.stack(codes, axis=1)
+    _, first, ids = np.unique(
+        tuples, axis=0, return_index=True, return_inverse=True
+    )
+    take = pa.array(first)
+    return ids.reshape(-1), [c.take(take) for c in cols]
+
+
+def _scatter(n_keys: int, n_fids: int, names: list[str], empty: list):
+    """The ``mapInArrow`` body that lays out one key-partitioned
+    partition's ``(keys…, __fid, slot values…)`` rows wide: one row per
+    key, feature ``i`` from slot ``i % len(empty)`` at fid
+    ``i // len(empty)``. A fid the key lacks takes its slot's ``empty``
+    value (None → NULL); a NULL fid row only makes its key appear."""
+    per = len(empty)
+    step = max(1, _BATCH_CELLS // len(names))  # keys per output batch
+
+    def lay_out(batches):
+        batches = list(batches)
+        if not sum(b.num_rows for b in batches):
+            return
+        t = pa.Table.from_batches(batches).combine_chunks()
+        cols = [c.chunk(0) for c in t.columns]
+        ids, keys = _key_ids(cols[:n_keys])
+        fid = cols[n_keys]
+        rows = np.flatnonzero(fid.is_valid().to_numpy(zero_copy_only=False))
+        # row index per (fid, key) cell, −1 where the key lacks the fid
+        at = np.full((n_fids, len(keys[0])), -1, np.int64)
+        at[fid.take(pa.array(rows)).to_numpy(), ids[rows]] = rows
+        for k0 in range(0, len(keys[0]), step):
+            block = at[:, k0 : k0 + step]
+            n = block.shape[1]
+            gather = pa.array(block.ravel(), mask=block.ravel() < 0)
+            slots = [
+                v.take(gather)
+                if e is None
+                else v.take(gather).fill_null(pa.scalar(e, v.type))
+                for v, e in zip(cols[n_keys + 1 :], empty)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [k.slice(k0, n) for k in keys]
+                + [
+                    slots[i % per].slice(i // per * n, n)
+                    for i in range(n_fids * per)
+                ],
+                names=names,
+            )
+
+    return lay_out
 
 
 def n_union_cells(spec: FeatureSpec) -> int:
@@ -256,7 +348,7 @@ def n_union_cells(spec: FeatureSpec) -> int:
 def compile_bucket_pivot(
     spec: FeatureSpec, df: DataFrame, key_partitioned: bool = False
 ) -> DataFrame:
-    """Compile ``spec`` into the integer-cell pivot plan.
+    """Compile ``spec`` into the integer-cell roll-up plan.
 
     The two layouts differ only in where the one ``repartition(key)``
     sits; ``HashPartitioning(keys)`` satisfies the clustered
@@ -297,7 +389,7 @@ def _rollup(
     level1: list[Column],
     key_partitioned: bool,
 ) -> DataFrame:
-    """Cell ids, level 1, fan-out, pivot and features over ``df``, which
+    """Cell ids, level 1, fan-out, merge and scatter over ``df``, which
     holds the keys, the grouping columns, ``spec.time_col`` and the
     ``carry`` columns that ``level1`` aggregates into each of
     :func:`_stats`'s suffixes (raw measures for batch, day partials'
@@ -333,28 +425,41 @@ def _rollup(
     if not key_partitioned:
         # after the map-combined (key, cell) exchange, so combine is kept
         partial = partial.repartition(*keys)
-    # HashPartitioning(keys) now satisfies every aggregate below: the
-    # pivot's own (key, fid) phase and its PivotFirst phase add no exchange
+    # HashPartitioning(keys) now satisfies the (key, fid) merge below, so
+    # it adds no exchange, and it keeps each key in one scatter partition
     fanned = partial.select(
         *keys,
         F.expr(_fanout_sql(spec, doms, n_cells)).alias("__fid"),
         *[F.col(suffix) for suffix, _, _ in stats],
     )
     n_fids = _fid_bases(spec)[-1]
-    pivoted = (
-        fanned.groupBy(*spec.keys)
-        .pivot("__fid", list(range(n_fids)))
-        .agg(*[merge.alias(suffix) for suffix, _, merge in stats])
+    # merge the partials per (key, fid), in long form
+    merged = fanned.groupBy(*keys, "__fid").agg(
+        *[merge.alias(suffix) for suffix, _, merge in stats]
     )
-
     # features() runs grouping → combo → window → agg → measure and the
-    # fids run grouping → combo → window, so feature i reads fid i // per
-    per = len(spec.aggs) * len(spec.measures)
-    # one Py4J call + one parse each, instead of 2080 F.expr round-trips
-    return pivoted.selectExpr(
+    # fids run grouping → combo → window, so feature i is slot i % per of
+    # fid i // per: one value column per slot, computed per (key, fid) row
+    slots = [(agg, m) for agg in spec.aggs for m in spec.measures]
+    values = merged.selectExpr(
         *[quote_ident(k) for k in spec.keys],
+        "__fid",
         *[
-            _feature_sql(spec, f, i // per, len(stats) == 1)
-            for i, f in enumerate(spec.features())
+            f"{_slot_sql(spec, agg, m)} AS __slot{j}"
+            for j, (agg, m) in enumerate(slots)
         ],
+    )
+    nk, per = len(spec.keys), len(slots)
+    fields = values.schema.fields
+    typed = [fields[nk + 1 + i % per] for i in range(n_fids * per)]
+    schema = StructType(
+        fields[:nk]
+        + [
+            StructField(f.name, t.dataType, t.nullable)
+            for f, t in zip(spec.features(), typed)
+        ]
+    )
+    return values.mapInArrow(
+        _scatter(nk, n_fids, schema.names, [_EMPTY.get(a) for a, _ in slots]),
+        schema,
     )

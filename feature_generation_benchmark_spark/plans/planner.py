@@ -69,7 +69,7 @@ def choose_strategy(spec: FeatureSpec) -> Strategy:
     # and the bucketed strategies still collapse rows to one partial per
     # (key, cats) first (a previous windows>1 precondition here forced
     # wide single-window specs into the pathological plan for no reason).
-    # The integer-cell pivot removes the per-row CASE WHEN cost (measured
+    # The integer-cell plan removes the per-row CASE WHEN cost (measured
     # ~2x at 1.7B rows). A layout too large for a BIGINT cell id is a range
     # limit, not a cost trade-off: the canonical plan serves it.
     if (

@@ -60,8 +60,8 @@ class Grouping:
     ``closed=True`` additionally asserts the domain is COMPLETE — the data
     never carries other values for these columns. Physical plans may then
     drop the out-of-domain escape hatch (``plans/bucket_pivot.py`` skips
-    its per-column overflow cell slot, keeping the pivot at its minimal
-    width). Under the default ``closed=False``, a row that is
+    its per-column overflow cell slot, keeping its cell count at its
+    minimum). Under the default ``closed=False``, a row that is
     out-of-domain in some column still counts toward every grouping that
     does not use that column — exact canonical semantics on any data.
     If ``closed=True`` is declared and out-of-domain values DO occur,
@@ -254,7 +254,7 @@ def reference_spec(round_decimals: int | None = None) -> FeatureSpec:
     """The full 2,080-feature reference task (``docs/index.md:120-151``).
 
     ``closed=True``: the generator's category domains are complete
-    (``src/lib.rs:28,33-47,51``), so the at-scale pivot plan keeps its
+    (``src/lib.rs:28,33-47,51``), so the at-scale bucketed plan keeps its
     minimal 416-cell layout with no out-of-domain overflow slots."""
     return FeatureSpec(
         key="customer_id",

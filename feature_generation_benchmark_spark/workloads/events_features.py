@@ -233,8 +233,8 @@ QUERIES = [
         "feat_bucket_pivot",
         _bucket_pivot,
         _ORACLE,
-        "integer-cell partial agg + known-values PivotFirst + arithmetic "
-        "rollup (strategy A2+A3'', the at-scale default)",
+        "integer-cell partial agg + arithmetic long-form rollup + Arrow "
+        "scatter (strategy A2+A3'', the at-scale default)",
     ),
     QueryDef(
         "feat_bucket_pivot_keypart",

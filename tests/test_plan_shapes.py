@@ -113,12 +113,14 @@ def test_bucket_pivot_is_two_shuffles(spark, spec, trx_path):
 
 
 def test_bucket_pivot_reference_plan_size(spark, tmp_path):
-    """The 2,080-feature roll-up happens in long form before the pivot:
-    each partial row fans out to the feature cells (grouping combo ×
-    window) it feeds, and each feature reads its own cell's pivot slots
-    (avg reads two). The optimized plan has ~25k nodes; re-adding the
-    window's buckets in a projection above the pivot gave 53,861 with a
-    shared cumulative layer and 205,803 without one."""
+    """The 2,080 features are laid out by one Arrow scatter: the plan
+    merges the partials per (key, feature cell) in long form, computes one
+    value column per (agg, measure) slot — 5 expressions for the reference
+    task, not 2,080 — and widens them in a single ``mapInArrow``, with no
+    Spark ``pivot``. The optimized plan has ~2.6k nodes; the pivot and a
+    2,080-expression projection over its slots gave 25,434, and rolling
+    the windows up above the pivot gave 53,861 with a shared cumulative
+    layer and 205,803 without one."""
     from feature_generation_benchmark_spark.plans import compile_bucket_pivot
     from feature_generation_benchmark_spark.spec import reference_spec
 
@@ -133,9 +135,11 @@ def test_bucket_pivot_reference_plan_size(spark, tmp_path):
     ).write.parquet(path)
     df = spark.read.parquet(path)
     qe = compile_bucket_pivot(reference_spec(), df)._jdf.queryExecution()
+    plan = qe.optimizedPlan().toJSON()
     # every node of the plan JSON carries one "class" key
-    nodes = qe.optimizedPlan().toJSON().count('"class":')
-    assert nodes <= 30_000, nodes
+    nodes = plan.count('"class":')
+    assert nodes <= 3_000, nodes
+    assert "pivotfirst" not in plan.lower()
 
 
 def test_bucket_pivot_aggregates_only_the_stats_the_aggs_read(

@@ -299,6 +299,49 @@ def test_key_with_only_dead_cell_rows_keeps_empty_features(spark):
         assert rows[0]["a1_1d_count"] == 1, name
 
 
+def test_null_key_keeps_its_row(spark):
+    """A NULL ``customer_id`` is one key like any other: it comes out as
+    exactly one row, next to the non-NULL key, with the same features
+    under every strategy. bucket_pivot lays each partition's keys out in
+    Python, where a key id that went through a float (NULL → NaN) would
+    not convert back to an integer."""
+    spec = FeatureSpec(
+        key="customer_id",
+        time_col="t_minus",
+        measure="trx_amnt",
+        windows=(7, 30),
+        groupings=(Grouping(cols=("card_type",), domains=(CARD_TYPES,)),),
+    )
+    df = spark.createDataFrame(
+        [
+            (None, "DC", 1.0, 2),
+            (None, "CC", 4.0, 20),
+            (5, "DC", 2.0, 3),
+            (5, "DC", 6.0, 9),
+        ],
+        "customer_id long, card_type string, trx_amnt double, t_minus long",
+    )
+    compilers = {
+        "case_when": compile_case_when,
+        "bucket_pivot": compile_bucket_pivot,
+        "bucket_pivot_keypart": lambda s, d: compile_bucket_pivot(
+            s, d, key_partitioned=True
+        ),
+    }
+    out = {}
+    for name, compiler in compilers.items():
+        rows = [r.asDict() for r in compiler(spec, df).collect()]
+        assert sorted(r["customer_id"] is None for r in rows) == [
+            False,
+            True,
+        ], (name, rows)
+        out[name] = {r["customer_id"]: r for r in rows}
+    assert out["case_when"][None]["CC_30d_sum"] == 4.0
+    assert out["case_when"][None]["DC_7d_count"] == 1
+    for name in ("bucket_pivot", "bucket_pivot_keypart"):
+        assert out[name] == out["case_when"], name
+
+
 def test_closed_domains_keep_minimal_cell_count():
     """closed=True (reference task: generator domains are complete) must
     keep the at-scale pivot at its minimal width; the open default pays
